@@ -14,7 +14,7 @@ over it —
                                  exact and near-dup signals)
   4. quality floor              (token count + stopword/alpha ratios,
                                  pure codegen — ops/textstats semantics)
-  5. exact dedup                (md5 groupBy, keep min url)
+  5. exact dedup                (md5 window, keep min url)
   6. near-dup collapse          (banded MinHash-LSH over h32 shingles,
                                  keep the band-bucket's BEST-quality
                                  member, ties to min url — FineWeb
@@ -28,14 +28,17 @@ over it —
 
 and writes a training-ready parquet table bucketed-ready on url.
 
-Every stage is a DataFrame transform on one DAG: Spark pipelines the
-narrow stages into the scans, and the wide ops are the two dedup
-shuffles (md5 keys; band keys) plus the host-grained template
-aggregate (200-char prefixes only — bodies never shuffle).  The
-funnel report makes the job
-auditable at 100 TB: each stage's survivor count is one groupBy away,
-computed on the SAME cached stage outputs that feed the next stage, so
-audit and data cannot drift.
+No stage self-joins its input: exact dedup is a window, and the
+template strip, band collapse and span strip each join their input to
+ONE key-only branch derived from it (the host-template table, the
+band losers, the per-doc span list).  The plan tree therefore at most
+doubles per stage, and AQE's exchange reuse runs the shared subtrees
+once.  Spark pipelines the narrow stages into the scan; the wide ops
+are the md5 window, the band-key window, the span windows and the
+host-grained template aggregate (200-char prefixes only — bodies
+never shuffle).  ``curate()`` materializes the whole funnel once;
+each stage's survivor count is an ``observe()`` on the same
+execution, so audit and data cannot drift.
 
 Run:  spark-submit --py-files dist/engine.zip jobs/curate.py \
           --input /path/extracted --output /path/curated
@@ -50,13 +53,17 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from pdf_parser_spark.ops.common import tokens
 
 MIN_TOKENS = 5          # quality floor: at least this many tokens
 MIN_ALPHA_RATIO = 0.5   # alpha-bearing token fraction floor
 # near-dup stage: shingle width / bands / rows come from ops.dedup
+# AQE drops the observe() metrics of a query stage it replaces with an
+# empty relation, so curate() turns that rule off while the funnel runs
+EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+PROPAGATE_EMPTY = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
 
 
 def url_admission(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -167,11 +174,13 @@ def quality_floor(df: DataFrame, text_col: str = "text_extracted") -> DataFrame:
 def exact_dedup(df: DataFrame, text_col: str = "text_extracted") -> DataFrame:
     """Stage 5: one md5 shuffle; the keeper is the min url per digest
     (deterministic, resume-stable)."""
-    keyed = df.withColumn("_md5", F.md5(F.col(text_col).cast("binary")))
-    keepers = keyed.groupBy("_md5").agg(F.min("url").alias("_keep_url"))
-    return keyed.join(keepers, "_md5").filter(
-        F.col("url") == F.col("_keep_url")
-    ).drop("_md5", "_keep_url")
+    by_md5 = Window.partitionBy("_md5")
+    return (
+        df.withColumn("_md5", F.md5(F.col(text_col).cast("binary")))
+        .withColumn("_keep_url", F.min("url").over(by_md5))
+        .filter(F.col("url") == F.col("_keep_url"))
+        .drop("_md5", "_keep_url")
+    )
 
 
 def neardup_collapse(df: DataFrame, text_col: str = "text_extracted") -> DataFrame:
@@ -187,11 +196,10 @@ def neardup_collapse(df: DataFrame, text_col: str = "text_extracted") -> DataFra
     shuffle — never text; a near-dup group shares at least one band
     bucket, and the keeper rule (a doc survives only if it wins its
     bucket in EVERY band) removes one side of every detected pair
-    deterministically.  Docs too short to shingle pass through
-    untouched.
+    deterministically: every url that loses some band is dropped by
+    one anti join.  Docs too short to shingle pass through untouched.
     """
-    from pdf_parser_spark.ops.common import tokens
-    from pdf_parser_spark.ops.dedup import LSH_BANDS, LSH_ROWS, _make_sig_udf
+    from pdf_parser_spark.ops.dedup import SHINGLE_N, _make_sig_udf, lsh_bands
     from pdf_parser_spark.ops.textstats import quality_features
 
     sig_udf = _make_sig_udf()
@@ -201,49 +209,21 @@ def neardup_collapse(df: DataFrame, text_col: str = "text_extracted") -> DataFra
         (0.4 * stop_ratio + 0.3 * diversity + 0.3 * length_sat) * 10000.0
         + 0.5
     ).cast("long")
-    # persist is load-bearing (CollapseProject would re-run the UDF
-    # per band key and join side — measured ~10x in ops/dedup.py)
-    sig = df.select(
-        "url",
-        (-q_int).alias("_nq"),
-        sig_udf(F.col(text_col)).alias("_sig"),
-    ).persist()
-    try:
-        banded = sig.filter(F.size("_sig") >= 1)
-        band_cols = [
-            F.concat_ws(
-                ",",
-                *[
-                    F.col("_sig")[b * LSH_ROWS + r].cast("string")
-                    for r in range(LSH_ROWS)
-                ],
-            ).alias(f"_band{b}")
-            for b in range(LSH_BANDS)
-        ]
-        keyed = banded.select("url", "_nq", *band_cols)
-        keep = None
-        for b in range(LSH_BANDS):
-            # arg-max quality (min of (-q, url)) is a partial-aggregable
-            # min_by — map-side combine, same shape as the old min(url)
-            kb = keyed.groupBy(f"_band{b}").agg(
-                F.min_by("url", F.struct("_nq", "url")).alias("_ku")
-            )
-            ok = (
-                keyed.select("url", f"_band{b}")
-                .join(kb, f"_band{b}")
-                .filter(F.col("url") == F.col("_ku"))
-                .select("url")
-            )
-            keep = ok if keep is None else keep.intersect(ok)
-        passthrough = sig.filter(F.size("_sig") < 1).select("url")
-        # materialize the (urls-only, small) keep set while sig is
-        # still cached — downstream consumers must never re-trigger
-        # the signature UDF through the band joins
-        keep = keep.unionByName(passthrough).persist()
-        keep.count()
-        return df.join(keep, "url")
-    finally:
-        sig.unpersist()
+    # the signature is empty exactly when the doc has < SHINGLE_N
+    # tokens; filtering on that BEFORE the UDF (not on its output)
+    # keeps the optimizer from evaluating the UDF once per consumer
+    sig = df.filter(F.size(tok) >= SHINGLE_N).select(
+        "url", (-q_int).alias("_nq"), sig_udf(F.col(text_col)).alias("sig")
+    )
+    # arg-max quality = min of (-q, url) over the band bucket
+    bucket = Window.partitionBy("band", "band_key")
+    losers = (
+        lsh_bands(sig)
+        .withColumn("_ku", F.min_by("url", F.struct("_nq", "url")).over(bucket))
+        .filter(F.col("url") != F.col("_ku"))
+        .select("url")
+    )
+    return df.join(losers, "url", "left_anti")
 
 
 def strip_repeated_spans(
@@ -257,10 +237,11 @@ def strip_repeated_spans(
     for lineage.
 
     Scale shape (same as the oracled stats op): one Arrow gram pass,
-    one combinable dup-gram aggregate, only (gram, id, pos) triples
-    shuffle, islands window partitioned per document.  The rebuild
-    drops covered token positions with an indexed array filter —
-    per-row cost O(n_tok × n_islands), islands typically ≤ a few.
+    one dup-gram window over the gram hash, only (gram, id, pos)
+    triples shuffle, islands window partitioned per document.  The
+    rebuild drops covered token positions with an indexed array
+    filter — per-row cost O(n_tok × n_islands), islands typically ≤ a
+    few.
     """
     from pdf_parser_spark.ops.substring import (
         _make_gram_udf,
@@ -271,22 +252,12 @@ def strip_repeated_spans(
     udf = _make_gram_udf()
     grams = df.select(
         id_col, F.posexplode(udf(F.col(text_col))).alias("pos", "g")
-    ).persist()
-    try:
-        islands = merge_islands(dup_gram_hits(grams, id_col), id_col)
-        per_doc = islands.groupBy(id_col).agg(
-            F.collect_list(F.struct("s", "e")).alias("_iv")
-        )
-        # the per-doc interval list is tiny (ids + a few int pairs,
-        # only for documents that carry a repeated span); materialize
-        # it while grams is cached so the rebuild join never
-        # re-triggers the gram UDF.  It stays cached for the rest of
-        # the job — bounded residency, and evicting it would recompute
-        # the gram pass.
-        per_doc = per_doc.persist()
-        per_doc.count()
-    finally:
-        grams.unpersist()
+    )
+    per_doc = (
+        merge_islands(dup_gram_hits(grams, id_col), id_col)
+        .groupBy(id_col)
+        .agg(F.collect_list(F.struct("s", "e")).alias("_iv"))
+    )
     joined = df.join(per_doc, id_col, "left")
     tok = tokens(F.col(text_col))
     kept = F.filter(
@@ -310,31 +281,20 @@ def strip_repeated_spans(
 def curate(extracted: DataFrame) -> tuple[DataFrame, list[dict]]:
     """Run the funnel; returns (curated DF, per-stage lineage rows).
 
-    Stage boundaries CHECKPOINT, not just cache: localCheckpoint
-    materializes the stage (MEMORY_AND_DISK blocks, same residency as
-    persist) AND truncates the logical plan.  Truncation is
-    load-bearing — the self-joining stages each reference their input
-    more than once (template strip ×2, exact dedup ×2, the band
-    collapse ×8, span strip ×2), so an unbroken lineage compounds the
-    PLAN multiplicatively: by the last stage the AQE plan *string*
-    alone (explainString under onUpdatePlan) ran the driver heap out
-    of memory — the plan, not the data, was the memory hog.  Earlier
-    stages' blocks are released by the ContextCleaner as their frames
-    go out of scope; a production run swaps in reliable checkpointing
-    (spark.checkpoint.dir) at the same boundaries, which additionally
-    survives executor loss.  The raw input is counted but never
-    materialized (a plain scan both consumers re-read at parquet
-    speed); the caller writes the curated frame immediately after
-    this returns."""
-    funnel: list[dict] = []
+    The stages compose into one lazy plan, which is materialized once
+    by an eager ``localCheckpoint`` of the last stage; the caller
+    writes the checkpointed frame.  Each stage's row count is an
+    ``observe()`` metric of that single execution, which runs with
+    AQE's empty-relation rule off so that an emptied stage still
+    reports its count."""
+    observed: list[tuple[str, Observation]] = []
 
-    def stage(name: str, frame: DataFrame, persist: bool = True) -> DataFrame:
-        if persist:
-            frame = frame.localCheckpoint(eager=True)
-        funnel.append({"stage": name, "rows": frame.count()})
-        return frame
+    def stage(name: str, frame: DataFrame) -> DataFrame:
+        obs = Observation(name)
+        observed.append((name, obs))
+        return frame.observe(obs, F.count(F.lit(1)).alias("rows"))
 
-    s0 = stage("input", extracted, persist=False)
+    s0 = stage("input", extracted)
     # URL admission runs FIRST: the cheapest filter in the funnel (a
     # scan-local projection over the url column, zero shuffle), so
     # structurally-spammy pages never reach the content stages.
@@ -345,7 +305,17 @@ def curate(extracted: DataFrame) -> tuple[DataFrame, list[dict]]:
     s3 = stage("exact_dedup", exact_dedup(s2))
     s4 = stage("near_dedup", neardup_collapse(s3))
     s5 = stage("span_dedup", strip_repeated_spans(s4))
-    return s5, funnel
+    conf = extracted.sparkSession.conf
+    prior = conf.get(EXCLUDED_RULES, None)
+    conf.set(EXCLUDED_RULES, ",".join(filter(None, (prior, PROPAGATE_EMPTY))))
+    try:
+        curated = s5.localCheckpoint(eager=True)
+    finally:
+        if prior is None:
+            conf.unset(EXCLUDED_RULES)
+        else:
+            conf.set(EXCLUDED_RULES, prior)
+    return curated, [{"stage": n, "rows": o.get["rows"]} for n, o in observed]
 
 
 def with_host_rank(curated: DataFrame, ranks: DataFrame) -> DataFrame:
@@ -399,16 +369,12 @@ def main() -> None:
     curated, funnel = curate(extracted)
     if args.host_ranks:
         curated = with_host_rank(curated, spark.read.parquet(args.host_ranks))
-    # The parquet write is the ONLY action served by the stage-4 cache
-    # (r2 ADVICE: a cache eviction between two dependent actions would
-    # recompute the whole funnel, LSH joins included).  The token count
-    # ships in the output as `n_tokens` — a useful lineage column — so
-    # the composition aggregate reads the WRITTEN table back instead of
-    # re-traversing the funnel.
+    # The token count ships in the output as `n_tokens` — a useful
+    # lineage column — so the composition aggregate reads the WRITTEN
+    # table back instead of re-traversing the funnel.
     curated.withColumnRenamed("_n_tok", "n_tokens").withColumnRenamed(
         "_tok_removed", "span_tokens_removed"
     ).write.mode("overwrite").parquet(f"{args.output}/data")
-    curated.unpersist()
     comp = [
         r.asDict()
         for r in spark.read.parquet(f"{args.output}/data")

@@ -101,7 +101,7 @@ def text_script_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         gt = counts[name] > best_n
         best = F.when(gt, F.lit(name)).otherwise(best)
         best_n = F.when(gt, counts[name]).otherwise(best_n)
-    dom_ppm = F.when(total > 0, (best_n * 1_000_000 / total).cast("long")).otherwise(
+    dom_ppm = F.when(total > 0, F.call_function("div", best_n * 1_000_000, total)).otherwise(
         F.lit(0).cast("long")
     )
     # mixed: any NON-dominant class holds >= MIXED_MIN_PPM of letters
@@ -116,7 +116,7 @@ def text_script_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(counts[name])
         second = share_wo_best if second is None else F.greatest(second, share_wo_best)
     mixed = F.when(
-        total > 0, (second * 1_000_000 / total).cast("long") >= MIXED_MIN_PPM
+        total > 0, F.call_function("div", second * 1_000_000, total) >= MIXED_MIN_PPM
     ).otherwise(F.lit(False))
     return docs.select(
         "doc_id",

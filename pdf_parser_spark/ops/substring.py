@@ -22,14 +22,14 @@ Scale design:
   as the MinHash signature: Catalyst HOF lambdas run interpreted at
   ~3 µs/element-op; numpy + C md5 is ~50× faster) producing one
   int64 array per document; positions come free from posexplode.
-* The duplicated-gram set is ONE map-side-combinable aggregate keyed
-  on the 64-bit gram hash; only (gram, doc_id, pos) int triples ever
-  shuffle — text never moves.
+* The duplicated-gram test is ONE window keyed on the 64-bit gram
+  hash (min/max doc id per gram), so the gram relation is read once;
+  only (gram, doc_id, pos) int triples ever shuffle — text never
+  moves.  A boilerplate gram shared by millions of documents puts all
+  its triples in one window partition.
 * Span merging is the classic gaps-and-islands window per document —
   partitioned by doc_id, bounded by the document's own matched-gram
-  count (NOT a corpus sort).  A boilerplate gram shared by millions
-  of documents fans out join-side only, and AQE's skew-join splitting
-  handles the hot hash (the aggregate side is already combined).
+  count (NOT a corpus sort).
 * The final per-doc rollup shares the document partitioning the
   islands window already established — one exchange serves both.
 
@@ -105,15 +105,16 @@ def _substring_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dup_gram_hits(grams: DataFrame, id_col: str) -> DataFrame:
-    """(id, pos) rows whose gram ``g`` occurs in >1 distinct document.
-    The duplicated-gram set is ONE map-side-combinable aggregate."""
-    dup = (
-        grams.groupBy("g")
-        .agg(F.count_distinct(id_col).alias("nd"))
-        .filter(F.col("nd") > 1)
-        .select("g")
+    """(id, pos) rows whose gram ``g`` occurs in >1 distinct document:
+    ``min(id) != max(id)`` over a window on ``g`` (the same test as
+    ``count(DISTINCT id) > 1``), so ``grams`` is read once."""
+    by_gram = Window.partitionBy("g")
+    return (
+        grams.withColumn("_lo", F.min(id_col).over(by_gram))
+        .withColumn("_hi", F.max(id_col).over(by_gram))
+        .filter(F.col("_lo") != F.col("_hi"))
+        .drop("g", "_lo", "_hi")
     )
-    return grams.join(dup, "g").drop("g", "nd")
 
 
 def merge_islands(hits: DataFrame, id_col: str) -> DataFrame:
@@ -155,16 +156,10 @@ def substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     {GRAM_N}-gram shared with another document, with overlapping
     matches merged into maximal spans (gaps-and-islands)."""
     udf = _make_gram_udf()
-    # persist: the gram UDF feeds both the dup-set aggregate and the
-    # match join (CollapseProject re-runs it per consumer otherwise)
-    grams = (
-        _substring_corpus(spark, sf_dir)
-        .select(
-            "doc_id",
-            F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
-            F.posexplode(udf(F.col("text"))).alias("pos", "g"),
-        )
-        .persist()
+    grams = _substring_corpus(spark, sf_dir).select(
+        "doc_id",
+        F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
+        F.posexplode(udf(F.col("text"))).alias("pos", "g"),
     )
     islands = merge_islands(dup_gram_hits(grams, "doc_id"), "doc_id")
     return (

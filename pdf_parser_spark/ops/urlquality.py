@@ -119,7 +119,10 @@ def spam_feature_cols(url: F.Column) -> dict[str, F.Column]:
     scan-local codegen; safe to project anywhere."""
     url_len = F.length(url).cast("long")
     n_digits = _count_class(url, "[0-9]")
-    digit_ppm = (n_digits * 1_000_000 / url_len).cast("long")
+    # integral div, guarded: an empty url must score, not raise
+    digit_ppm = F.when(
+        url_len > 0, F.call_function("div", n_digits * 1_000_000, url_len)
+    ).otherwise(F.lit(0).cast("long"))
     n_hyphens = _count_class(url, "-")
     n_params = _count_class(url, "=")
     # segments between slashes after the scheme's ``//``

@@ -36,12 +36,6 @@ def build_session(
         .config("spark.sql.execution.arrow.useLargeVarTypes", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # Bound every plan-STRING build (UI events, AQE onUpdatePlan
-        # explain) to 1 MB: a deep self-joining DAG can compound its
-        # plan text multiplicatively, and the default cap (~2 GB)
-        # lets a diagnostic string OOM the driver heap — the plan
-        # string is pure telemetry and safe to truncate.
-        .config("spark.sql.maxPlanStringLength", "1048576")
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

@@ -103,6 +103,74 @@ def test_curate_funnel(spark):
     )
 
 
+def _funnel_plan(extracted):
+    """The curate stages composed lazily, as ``curate()`` composes them,
+    without its observations or its checkpoint."""
+    from jobs import curate as C
+
+    df = C.url_admission(extracted).filter(F.col("decode_error").isNull())
+    for fn in (C.strip_host_templates, C.quality_floor, C.exact_dedup,
+               C.neardup_collapse, C.strip_repeated_spans):
+        df = fn(df)
+    return df
+
+
+def test_curate_plan_stays_small(spark):
+    """No stage joins its input to more than one branch of itself, so
+    the unmaterialized funnel's optimized plan stays small; stages
+    that self-join their input 2-8 times compound it past 1 MB."""
+    plan = _funnel_plan(run_extract(_pages(spark)))._jdf.queryExecution()
+    assert len(plan.optimizedPlan().toString()) < 256 * 1024
+
+
+def test_curate_runs_few_spark_jobs(spark, tmp_path):
+    """curate() materializes its plan once, with no per-stage count:
+    curate plus the parquet write stay within a small, fixed number of
+    Spark jobs (AQE submits one per query stage)."""
+    extracted = run_extract(_pages(spark), fmt="txt", threshold=100_000)
+    src = str(tmp_path / "extracted")
+    extracted.write.parquet(src)
+    sc = spark.sparkContext
+    sc.setJobGroup("curate-job-bound", "curate + write")
+    try:
+        curated, funnel = curate(spark.read.parquet(src))
+        curated.write.parquet(str(tmp_path / "curated"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert funnel[-1]["rows"] == 3
+    assert len(sc.statusTracker().getJobIdsForGroup("curate-job-bound")) <= 16
+
+
+def test_curate_counts_stages_that_empty_out(spark):
+    """A funnel whose rows are all rejected early still reports every
+    stage's count (an emptied stage must not lose its observation)."""
+    spam = "https://t/p/920357102968457/item/"
+    rows = [(f"{spam}{i}", _LONG, None) for i in range(3)]
+    df = spark.createDataFrame(
+        rows, "url string, text_extracted string, decode_error string"
+    )
+    curated, funnel = curate(df)
+    assert [f["rows"] for f in funnel] == [3, 0, 0, 0, 0, 0, 0, 0]
+    assert curated.count() == 0
+
+
+def test_url_admission_scores_empty_url(spark):
+    """An empty url scores 0 and is admitted; it must not raise
+    DIVIDE_BY_ZERO (ANSI) and fail the job."""
+    from jobs.curate import url_admission
+    from pdf_parser_spark.ops.urlquality import spam_feature_cols
+
+    df = spark.createDataFrame(
+        [("",), ("https://t/p/920357102968457/item/4459817236",)], "url string"
+    )
+    feats = spam_feature_cols(F.col("url"))
+    row = df.filter(F.col("url") == "").select(
+        feats["digit_ppm"].alias("ppm"), feats["spam_score"].alias("score")
+    ).first()
+    assert (row.ppm, row.score) == (0, 0)
+    assert [r.url for r in url_admission(df).collect()] == [""]
+
+
 def test_template_strip_removes_host_banner_and_spares_mirrors(spark):
     """Per-host banner LCP is stripped from every carrier; a host
     whose docs are IDENTICAL up to the prefix cap is a mirror, not a
