@@ -45,97 +45,6 @@ CORPUS_CACHE = "/tmp/pdf_parser_spark_bench"
 CL_CORES = 4
 CL_MEM_MB = 6144
 
-# corpus ops measured per-round (a representative cut across dedup /
-# similarity / text analysis / multimodal / job-layer)
-BENCH_OPS = [
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_cluster",
-    "dedup_canonical",
-    "filter_overlap_matrix",
-    "winnow_fingerprint",
-    "winnow_span_candidates",
-    "ann_cosine_topk",
-    "ann_ivf_topk",
-    "text_token_stats",
-    "text_bpe_tokens",
-    "text_quality_score",
-    "text_lang_id",
-    "text_fingerprint",
-    "text_repetition",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "contamination_ngram",
-    "domain_stats",
-    "sample_hash",
-    "pii_redact",
-    "corpus_select",
-    "heavy_tail_classes",
-    "lineage_by_source",
-    "resume_anti_join",
-    "skew_buckets",
-    "url_dedup",
-    "url_canonicalize",
-    "line_dedup",
-    "stratified_sample",
-    "sessionize_events",
-    "asof_join_events",
-    "json_field_stats",
-    "pack_sequences",
-    "ngram_counts",
-    "tfidf_top_terms",
-    "kmeans_embeddings",
-    "chunk_documents",
-    "corpus_mix",
-    "corpus_shuffle",
-    "salted_join_stats",
-    "text_normalize",
-    "url_host_filter",
-    "incremental_dedup",
-    "quality_classifier",
-    "doclen_percentiles",
-    "dedup_containment",
-    "ann_lsh_topk",
-    "host_diversity",
-    "intradoc_dedup",
-    "substring_dedup",
-    "linkgraph_pagerank",
-    "crawl_priority",
-    "dedup_edit_verify",
-    "dsir_select",
-    "cardinality_kmv",
-    "split_decontaminated",
-    "lang_temperature_sample",
-    "heavy_hitters_cms",
-    "crawl_schedule",
-    "robots_filter",
-    "gopher_quality_filter",
-    "c4_line_filter",
-    "bloom_incremental_dedup",
-    "crawl_delta",
-    "anchor_text_stats",
-    "ccnet_lm_filter",
-    "text_entropy",
-    "dedup_semantic",
-    "pdf_image_stats",
-    "multimodal_container_meta",
-    "incremental_minhash_dedup",
-    "token_drift",
-    "sketch_overlap",
-    "url_blocklist_filter",
-    "host_centrality_hyperball",
-    "url_spam_score",
-    "text_script_detect",
-    "host_template_prefix",
-    "bm25_retrieval",
-    "pmi_top_pairs",
-    "robots_txt_eval",
-]
-
 
 def host_probe(n: int = 32) -> dict:
     """Measure the host's ACTUAL parallel capacity (single-core vs
@@ -358,12 +267,10 @@ def run_extract_formats(spark, corpus_path: str, passes: int = 2) -> dict:
 def run_ops(spark, sf_dir: str) -> dict:
     from pdf_parser_spark.ops import all_queries
 
-    qs = all_queries()
     times = {}
-    for name in BENCH_OPS:
+    for name, (fn, _sql) in all_queries().items():
         best = float("inf")
         for _ in range(2):  # best-of-2 vs bursty VM steal-time noise
-            fn, _sql = qs[name]
             df = fn(spark, sf_dir)
             t0 = time.time()
             # noop sink: materializes EVERY output column.  A count()

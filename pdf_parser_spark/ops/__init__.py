@@ -1,136 +1,59 @@
 """Training-data pipeline operators over the corpus tables.
 
-Beyond the reference's extraction pipeline (SURVEY.md §2), a
-100 TB-scale training-data engine needs corpus-level operators:
-deduplication (exact, MinHash-LSH, SimHash, n-gram Jaccard,
-embedding-cosine), approximate similarity search (brute-force and
-IVF-bucketed cosine top-k), text analysis (language-ID, quality
-scoring, token counting, fingerprinting), and multimodal column
-plumbing.  Each operator is a Spark-first DataFrame plan (built-in
-functions, no per-row Python except the explicitly-stubbed multimodal
-decode) with a DuckDB oracle-SQL twin for the driver's correctness
-gate.
+Corpus-level operators around the extraction pipeline (SURVEY.md §2):
+deduplication, text analysis, link analysis, splits, sketches, url
+admission and the corpus-curation, filtering and multimodal families.
+Each operator is a Spark-first DataFrame plan (built-in functions, no
+per-row Python except the explicitly-stubbed multimodal decode) with
+a DuckDB oracle-SQL twin for the driver's correctness gate.
 
 Registry contract: every module exposes ``QUERIES: dict[name ->
 (callable(spark, sf_dir) -> DataFrame, oracle_sql | None)]``.
 """
 
-def all_queries():
-    from pdf_parser_spark.ops import (
-        ablation,
-        assembly,
-        avmeta,
-        blocklist,
-        bm25,
-        bloom,
-        pmi,
-        canonical,
-        centrality,
-        clustering,
-        containment,
-        corpusstats,
-        skewjoin,
-        normalize,
-        curation,
-        dedup,
-        drift,
-        editverify,
-        filtering,
-        heuristics,
-        incnear,
-        linkgraph,
-        multimodal,
-        overlap,
-        pdfimages,
-        scriptmix,
-        selection,
-        semantic,
-        sketches,
-        template,
-        urlquality,
-        splits,
-        pipeline,
-        recrawl,
-        robots,
-        similarity,
-        substring,
-        temporal,
-        textstats,
-        webcorpus,
-        winnow,
-    )
+import importlib
 
-    # Module order is load-bearing: the driver's CORRECTNESS pass
-    # evaluates only the first 50 registry entries (2 of which are
-    # the extract entries emitted ahead of these).  Standing policy
-    # (round-4 verdict): ops whose newest green row is OLDEST lead the
-    # registry, modules ADDED or CHANGED this round come next, and
-    # last round's freshly-certified ops fall past the window.  Round
-    # 5: the r3-certified group (webcorpus .. curation, untouched
-    # since their r3 rows) re-enters first; then the new r5 modules
-    # (semantic, pdfimages, avmeta; incnear + drift + overlap +
-    # blocklist + centrality + canonical + ablation + winnow (2 ops)
-    # + urlquality + scriptmix + template + bm25 + pmi + robots
-    # added mid-round) and the r5-touched ones (multimodal's
-    # frame_sample container branch, filtering's PSL rules file);
-    # that is 22 + 26 = 48 with ONE to spare: sample_hash (r3-green,
-    # source unchanged since r2 — git-verifiable, the same
-    # out-of-window argument the r4 judge accepted) is moved to the
-    # registry tail below so every r5-new/touched op holds a fresh
-    # row.  The window now ends at robots_filter — the insertions
-    # push the whole dedup family, the whole textstats family,
-    # dedup_containment and the ann trio (all r4-certified, source
-    # unchanged; dedup_cluster oracle-exercised in-window anyway
-    # through dedup_canonical's full chain) just past the boundary;
-    # everything past it holds green r3/r4 rows and is
-    # source-unchanged this round.
+# Modules the jobs and streaming queries import, directly or through
+# one another.  Their ops lead the registry, so they always fall inside
+# the first 50 ``__spark_entry__.queries()`` entries that the driver's
+# correctness pass reads (tests/test_ops_parity.py::test_entry_smoke).
+PRODUCT_MODULES = (
+    "dedup",
+    "textstats",
+    "linkgraph",
+    "centrality",
+    "splits",
+    "sketches",
+    "substring",
+    "template",
+    "temporal",
+    "urlquality",
+)
+
+# Modules only the registry uses; their ops follow in this order.
+REGISTRY_MODULES = (
+    "webcorpus",
+    "curation",
+    "pdfimages",
+    "avmeta",
+    "drift",
+    "blocklist",
+    "canonical",
+    "ablation",
+    "winnow",
+    "scriptmix",
+    "multimodal",
+    "filtering",
+    "heuristics",
+    "recrawl",
+    "pipeline",
+    "editverify",
+    "selection",
+)
+
+
+def all_queries():
     out = {}
-    for mod in (
-        webcorpus,
-        temporal,
-        corpusstats,
-        clustering,
-        assembly,
-        skewjoin,
-        normalize,
-        curation,
-        semantic,
-        pdfimages,
-        avmeta,
-        incnear,
-        drift,
-        overlap,
-        blocklist,
-        centrality,
-        canonical,
-        ablation,
-        winnow,
-        urlquality,
-        scriptmix,
-        template,
-        bm25,
-        pmi,
-        robots,
-        multimodal,
-        filtering,
-        dedup,
-        textstats,
-        containment,
-        similarity,
-        heuristics,
-        bloom,
-        recrawl,
-        pipeline,
-        substring,
-        linkgraph,
-        editverify,
-        selection,
-        sketches,
-        splits,
-    ):
-        out.update(mod.QUERIES)
-    # see the window-accounting comment above: exactly one r3 op must
-    # yield its slot to the r5 additions; sample_hash's r3 row stays
-    # valid because its source is unchanged since r2
-    out["sample_hash"] = out.pop("sample_hash")
+    for name in PRODUCT_MODULES + REGISTRY_MODULES:
+        out.update(importlib.import_module(f"{__name__}.{name}").QUERIES)
     return out

@@ -16,7 +16,7 @@ Gopher quality rules and C4 line filtering.
 
 Exactness: every statistic is integer fixed-point (ratios at 10^4,
 mean word length at 10^2, floor division) so the DuckDB twin is
-value-identical — the ops/clustering.py policy.
+value-identical.
 
 Lines: the driver's synthetic ``documents.text`` is a single space-
 joined token stream, so both engines derive the SAME deterministic

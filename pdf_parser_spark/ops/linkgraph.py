@@ -5,9 +5,8 @@ Web-corpus curation weights documents by the authority of their host
 the canonical authority score is PageRank (Page, Brin, Motwani,
 Winograd, "The PageRank Citation Ranking", Stanford InfoLab 1999 —
 public).  The reference engine has no link analysis; this operator
-adds the iterative-graph algorithm class alongside ops/clustering.py's
-iterative-numeric k-means and ops/dedup.py's pointer-jumping connected
-components.
+adds the iterative-graph algorithm class alongside ops/dedup.py's
+pointer-jumping connected components.
 
 Why exact integers: float PageRank is not engine-comparable — the
 damped sum accumulates in engine-specific order, so ranks drift by
@@ -99,7 +98,7 @@ def pagerank_over_edges(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
         .distinct()
         .persist()
     )
-    n = nodes.count()  # one scalar to the driver, like kmeans' K×D pull
+    n = nodes.count()  # one scalar to the driver
     if n == 0:
         # a corpus whose links are all self-loops yields an empty
         # graph; emit the empty (node, pr, outdeg) frame rather than

@@ -7,7 +7,7 @@ arXiv:2302.03169 — hashed n-gram importance resampling; both public).
 This operator is the log-free exact-integer variant of that recipe so
 the Spark plan and the DuckDB oracle run the *identical* recurrence
 (ln() differs across engines in the last ulps and the value-hash gate
-would flake; see ops/clustering.py for the same policy on k-means):
+would flake):
 
 * features: unigrams hashed into ``N_BUCKETS`` buckets with the shared
   md5-based ``h32`` (engine-identical);

@@ -1,6 +1,6 @@
 """Cross-document repeated-span removal (exact substring dedup).
 
-Document-level dedup (exact / MinHash / containment) misses the
+Document-level dedup (exact / MinHash) misses the
 *span* failure mode: a viral quote, license header, or syndicated
 paragraph embedded in otherwise-unique documents.  Training-data
 pipelines remove the repeated span itself and keep the unique

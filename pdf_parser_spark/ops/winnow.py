@@ -188,7 +188,7 @@ def winnow_span_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join: persist + materialize it first, or the fingerprint UDF is
     # computed once per reference — and concurrent first-computation
     # of an unmaterialized cached relation is not deduped (the
-    # measured dedup_cluster/incnear finding, PLANS.md §12)
+    # measured dedup_cluster finding, PLANS.md §12)
     idx = (
         docs.select(
             "doc_id", F.explode(_make_fps_udf()(F.col("text"))).alias("fp")

@@ -1,19 +1,21 @@
 """Streaming MinHash-LSH near-dup admission with TTL-bounded state.
 
-The batch twins are :func:`pdf_parser_spark.ops.dedup.dedup_minhash_lsh`
-(whole-corpus) and :func:`pdf_parser_spark.ops.incnear.
-incremental_minhash_dedup` (one new dump vs a frozen index).  This is
-the CONTINUOUS version: as page files land, each document's MinHash
-signature is banded (the same 16-perm / 4-band machinery, so batch
-and stream agree bit-for-bit on signatures) and every band bucket
-keeps its FIRST member's signature in keyed state; a later arrival
-whose estimated jaccard against any bucket keeper reaches the 0.5
-admission threshold is flagged as a near-dup of that keeper.
+The batch twin is :func:`pdf_parser_spark.ops.dedup.dedup_minhash_lsh`
+(whole-corpus).  This is the CONTINUOUS version: as page files land,
+each document's MinHash signature is banded (the same 16-perm / 4-band
+machinery, so batch and stream agree bit-for-bit on signatures) and
+every band bucket keeps its FIRST member's signature in keyed state; a
+later arrival whose estimated jaccard against any bucket keeper
+reaches the 0.5 admission threshold is flagged as a near-dup of that
+keeper.
 
-Verdict semantics match the batch incremental op exactly: "similar to
-SOME earlier-SEEN document" (the index side there is all prior docs,
-not all prior admissions), so greedy within-stream chains behave the
-same way in both engines.
+Verdicts are a keeper-only approximation of "similar to SOME
+earlier-seen document": an arrival is compared only against the
+opener of each bucket it lands in, not against every earlier member.
+A document whose sole band collision with a true near-dup falls in a
+bucket opened by a dissimilar third document is therefore admitted,
+where an all-members comparison would flag it.  The trade is state
+size: one signature per bucket, however many documents hash there.
 
 Design:
 

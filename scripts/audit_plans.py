@@ -2,7 +2,7 @@
 
 Asserts the load-bearing plan properties: column pruning through the
 extraction UDF, single ArrowEvalPython node, broadcast resume
-anti-join, predicate pushdown, broadcast query side in top-k.
+anti-join, predicate pushdown, and the per-op shapes below.
 
 Usage: python scripts/audit_plans.py
 """
@@ -49,12 +49,6 @@ def main() -> None:
     p = plan_of(pages.filter(F.col("warc_ts") > F.lit("2025-01-01 00:00:05").cast("timestamp")).select("url"))
     checks.append(("pushdown-warc-ts", "warc_ts" in p.split("DataFilters")[-1][:200]
                    if "DataFilters" in p else False))
-
-    # 4. top-k broadcasts the query side
-    from pdf_parser_spark.ops.similarity import ann_cosine_topk
-
-    p = plan_of(ann_cosine_topk(spark, "/root/testdata/sf0.001"))
-    checks.append(("topk-broadcast-queries", "BroadcastNestedLoopJoin" in p))
 
     # 4b. contamination check broadcasts the benchmark side (the
     # corpus side must never shuffle its grams to a benchmark join)
@@ -131,19 +125,6 @@ def main() -> None:
          and "ArrowEvalPython" not in p)
     )
 
-    # 4h. containment prefix-filter join: every join is a hash join
-    # on an equi-key (shingle / doc id) — no cartesian or nested-loop
-    # shape anywhere, and the document-frequency aggregate combines
-    # map-side before its exchange
-    from pdf_parser_spark.ops.containment import dedup_containment
-
-    p = plan_of(dedup_containment(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("containment-hash-joins-only",
-         "CartesianProduct" not in p and "NestedLoop" not in p)
-    )
-    checks.append(("containment-df-partial-agg", "partial_count" in p))
-
     # 4i. intradoc_dedup is fully narrow: no exchange, no Python
     from pdf_parser_spark.ops.webcorpus import host_diversity, intradoc_dedup
 
@@ -160,26 +141,16 @@ def main() -> None:
         ("hostdiversity-no-python", "ArrowEvalPython" not in p)
     )
 
-    # 4k. LSH top-k probes via a broadcast equi-join on the bucket
-    from pdf_parser_spark.ops.similarity import ann_lsh_topk
-
-    p = plan_of(ann_lsh_topk(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("lsh-topk-broadcast-bucket-join",
-         "BroadcastHashJoin" in p and "NestedLoop" not in p)
-    )
-
-    # 4l. substring_dedup: every ArrowEvalPython occurrence sits inside
-    # the persisted gram relation (the hasher physically runs once per
-    # materialization — plan toString repeats the cached plan under
-    # each InMemoryTableScan), and all joins are hash joins
+    # 4l. substring_dedup: the gram hasher is evaluated exactly once
+    # (the duplicated-gram test is a window over the one gram relation,
+    # not a self-join that would re-run the UDF per branch), and there
+    # is no cartesian / nested-loop join
     from pdf_parser_spark.ops.substring import substring_dedup
 
     p = plan_of(substring_dedup(spark, "/root/testdata/sf0.001"))
     checks.append(
-        ("substring-cached-arrow-hash-joins",
-         p.count("ArrowEvalPython") == p.count("InMemoryRelation")
-         and p.count("InMemoryRelation") >= 1
+        ("substring-single-arrow-no-cartesian",
+         p.count("ArrowEvalPython") == 1
          and "CartesianProduct" not in p and "NestedLoop" not in p)
     )
 
@@ -222,19 +193,6 @@ def main() -> None:
     checks.append(
         ("crawlpriority-partial-agg-no-python",
          "partial_count" in p and "ArrowEvalPython" not in p)
-    )
-
-    # 4p. bloom_incremental_dedup: the filter build shuffles only
-    # O(m/32) word rows (bit_or partial-combines map-side) and the
-    # probe joins the BROADCAST word table — the corpus never shuffles
-    # to the probe, and nothing runs in Python
-    from pdf_parser_spark.ops.bloom import bloom_incremental_dedup
-
-    p = plan_of(bloom_incremental_dedup(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("bloom-broadcast-words-partial-bitor",
-         "BroadcastHashJoin" in p and "partial_bit_or" in p
-         and "ArrowEvalPython" not in p and "NestedLoop" not in p)
     )
 
     # 4q. split_decontaminated: the leak check is a LEFT SEMI join on
@@ -324,17 +282,6 @@ def main() -> None:
          and "BatchEvalPython" not in p)
     )
 
-    # 4x. corpus_shuffle: ONE exchange (hash on shard) + shard-local
-    # sort — never a corpus-global range sort (orderBy(rand()) shape)
-    from pdf_parser_spark.ops.assembly import corpus_shuffle
-
-    p = plan_of(corpus_shuffle(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("shuffle-shard-local-sort",
-         p.count("Exchange") == 1 and "hashpartitioning(shard" in p
-         and "rangepartitioning" not in p)
-    )
-
     # 4y. crawl_delta: one full-outer hash/merge join over per-url
     # aggregates; partial aggregation below the exchange (only one
     # (url_key, rep, sig) row per url per batch is shuffled)
@@ -369,34 +316,6 @@ def main() -> None:
          and "CartesianProduct" not in p)
     )
 
-    # 4ab. dedup_semantic: the SemDeDup pair join is CLUSTER-BUCKETED —
-    # an equi-join keyed on cluster_id (hash/SMJ), never a cartesian /
-    # nested-loop all-pairs; assignment stays a narrow Arrow map
-    from pdf_parser_spark.ops.semantic import dedup_semantic
-
-    p = plan_of(dedup_semantic(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("semantic-pair-join-cluster-bucketed",
-         any("cluster_id" in seg[:300] for seg in p.split("Join")[1:])
-         and "CartesianProduct" not in p and "NestedLoop" not in p)
-    )
-
-    # 4ac. incremental_minhash_dedup: the batch-vs-index candidate join
-    # is an equi-join on (band, band_key) — never cartesian/nested-loop
-    # — and document text never crosses a shuffle (only ids, 16-long
-    # signatures, and 32-byte band keys; the one Arrow eval is the
-    # signature UDF feeding the persisted relation)
-    from pdf_parser_spark.ops.incnear import incremental_minhash_dedup
-
-    p = plan_of(incremental_minhash_dedup(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("incnear-band-equijoin-no-text-shuffle",
-         any("band_key" in seg[:300] for seg in p.split("Join")[1:])
-         and "CartesianProduct" not in p and "NestedLoop" not in p
-         and all("text" not in seg[:400]
-                 for seg in p.split("Exchange hashpartitioning")[1:]))
-    )
-
     # 4ad. token_drift: the explosion collapses in a map-side partial
     # sum before its exchange (shuffle volume O(vocab x partitions),
     # never O(token instances)); the 1-row totals frame joins by
@@ -411,25 +330,6 @@ def main() -> None:
          and "TakeOrderedAndProject" in p
          and "ArrowEvalPython" not in p)
     )
-
-    # 4ae. sketch_overlap: the two K-sketches collapse into ONE
-    # persisted per-(lang, h) flags relation — every downstream branch
-    # reads InMemoryTableScan, so the corpus is scanned once; the
-    # theta frame joins by broadcast; no cartesian, no Python, and
-    # nothing text-sized crosses a shuffle (only lang/side/h rows)
-    from pdf_parser_spark.ops.overlap import sketch_overlap
-
-    df = sketch_overlap(spark, "/root/testdata/sf0.001")
-    p = plan_of(df)
-    checks.append(
-        ("sketchoverlap-single-scan-broadcast-theta",
-         "InMemoryTableScan" in p and "Broadcast" in p
-         and "CartesianProduct" not in p and "NestedLoop" not in p
-         and "ArrowEvalPython" not in p
-         and all("text" not in seg[:400]
-                 for seg in p.split("Exchange hashpartitioning")[1:]))
-    )
-    spark.catalog.clearCache()
 
     # 4af. url_blocklist_filter: the category list joins by BROADCAST
     # and the op is row-per-input — zero hash-partition exchanges at
@@ -534,52 +434,6 @@ def main() -> None:
          p.count("Exchange") == 1
          and "partial_min" in p
          and "text#" not in ex_seg)
-    )
-
-    # 4al. bm25_retrieval: the query vocabulary, df, and stats frames
-    # are broadcast; the only hash exchanges carry integer posting
-    # rows, never document text; no cartesian beyond the sanctioned
-    # 1-row stats cross
-    from pdf_parser_spark.ops.bm25 import bm25_retrieval
-
-    p = plan_of(bm25_retrieval(spark, "/root/testdata/sf0.001"))
-    ex_segs = [seg[:300] for seg in p.split("Exchange hashpartitioning")[1:]]
-    checks.append(
-        ("bm25-broadcast-query-side",
-         "BroadcastHashJoin" in p
-         and "CartesianProduct" not in p
-         and p.count("BroadcastNestedLoopJoin") <= 1
-         and all("text#" not in seg for seg in ex_segs))
-    )
-
-    # 4am. pmi_top_pairs: support filter applied to the AGGREGATED
-    # pair relation (partial counts below the exchange), top-k as
-    # TakeOrderedAndProject — no global sort, no cartesian beyond the
-    # 1-row totals cross
-    from pdf_parser_spark.ops.pmi import pmi_top_pairs
-
-    p = plan_of(pmi_top_pairs(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("pmi-support-bounded-joins",
-         "partial_count" in p
-         and "TakeOrderedAndProject" in p
-         and "CartesianProduct" not in p
-         and p.count("BroadcastNestedLoopJoin") <= 1)
-    )
-
-    # 4an. robots_txt_eval: the parsed rules relation is broadcast to
-    # the fetch log (the parse side is host-grained), the verdict is
-    # one partial-aggregable max, and no Python appears anywhere in
-    # parse, translate, match, or arg-max
-    from pdf_parser_spark.ops.robots import robots_txt_eval
-
-    p = plan_of(robots_txt_eval(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("robots-broadcast-rules-argmax",
-         "BroadcastHashJoin" in p
-         and "partial_max" in p
-         and "Python" not in p
-         and "CartesianProduct" not in p)
     )
 
     # 5. arrow batch size applied
