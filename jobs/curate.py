@@ -12,8 +12,8 @@ over it —
                                  group-LCP of its documents — removed
                                  before dedup, where it distorts both
                                  exact and near-dup signals)
-  4. quality floor              (token count + stopword/alpha ratios,
-                                 pure codegen — ops/textstats semantics)
+  4. quality floor              (at least MIN_TOKENS tokens, at least
+                                 half of them carrying an ASCII letter)
   5. exact dedup                (md5 window, keep min url)
   6. near-dup collapse          (banded MinHash-LSH over h32 shingles,
                                  keep the band-bucket's BEST-quality
@@ -28,17 +28,20 @@ over it —
 
 and writes a training-ready parquet table bucketed-ready on url.
 
-No stage self-joins its input: exact dedup is a window, and the
-template strip, band collapse and span strip each join their input to
-ONE key-only branch derived from it (the host-template table, the
-band losers, the per-doc span list).  The plan tree therefore at most
-doubles per stage, and AQE's exchange reuse runs the shared subtrees
-once.  Spark pipelines the narrow stages into the scan; the wide ops
-are the md5 window, the band-key window, the span windows and the
-host-grained template aggregate (200-char prefixes only — bodies
-never shuffle).  ``curate()`` materializes the whole funnel once;
-each stage's survivor count is an ``observe()`` on the same
-execution, so audit and data cannot drift.
+Execution: every per-document signal the later stages need is
+computed once, by one Arrow UDF over the template-stripped text
+(:func:`add_features`), in the scan's partitions before any shuffle.
+It returns one struct column ``_f``: the token count, the
+quality-floor verdict, the negated integer quality score, the MinHash
+signature and the 8-gram hashes.  ``curate()`` materializes that frame
+with an eager ``localCheckpoint``.  The quality floor is then a filter
+on ``_f.keep``, exact dedup a window over the md5 of the text, the
+band collapse a window over band keys cut from ``_f.sig`` plus one
+anti join, and the span strip a window over the hashes in ``_f.grams``
+whose hit positions a second Arrow UDF turns back into text.  A second
+``localCheckpoint`` materializes the curated frame.  Each stage's
+survivor count is an ``observe()`` metric of one of those two
+executions, so audit and data cannot drift.
 
 Run:  spark-submit --py-files dist/engine.zip jobs/curate.py \
           --input /path/extracted --output /path/curated
@@ -48,18 +51,45 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, Observation, Window, functions as F
+import pandas as pd  # noqa: E402
+from pyspark.sql import DataFrame, Observation, Window, functions as F  # noqa: E402
+from pyspark.sql.pandas.functions import pandas_udf  # noqa: E402
+from pyspark.sql.types import (  # noqa: E402
+    ArrayType,
+    BooleanType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-from pdf_parser_spark.ops.common import tokens
+from pdf_parser_spark.ops.dedup import lsh_bands, minhash_signature  # noqa: E402
+from pdf_parser_spark.ops.substring import GRAM_N, _gram_hashes, dup_gram_hits  # noqa: E402
+from pdf_parser_spark.ops.textstats import STOPWORDS  # noqa: E402
 
-MIN_TOKENS = 5          # quality floor: at least this many tokens
-MIN_ALPHA_RATIO = 0.5   # alpha-bearing token fraction floor
-# near-dup stage: shingle width / bands / rows come from ops.dedup
+MIN_TOKENS = 5  # quality floor: at least this many tokens, and 2 * alpha >= tokens
+# the per-document signals add_features computes, one struct per row;
+# nq is minus the integer quality score, so min(nq, url) picks the best
+FEATURES = StructType([
+    StructField("n_tok", IntegerType()),
+    StructField("keep", BooleanType()),
+    StructField("nq", LongType()),
+    StructField("sig", ArrayType(LongType())),
+    StructField("grams", ArrayType(LongType())),
+])
+REBUILT = StructType([
+    StructField("text", StringType()),
+    StructField("n_tok", IntegerType()),
+    StructField("removed", LongType()),
+])
 # AQE drops the observe() metrics of a query stage it replaces with an
 # empty relation, so curate() turns that rule off while the funnel runs
 EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
@@ -159,16 +189,80 @@ def strip_host_templates(
     )
 
 
-def quality_floor(df: DataFrame, text_col: str = "text_extracted") -> DataFrame:
-    """Stage 4: drop rows under the token-count / alpha-ratio floor
-    (pure codegen; same signal family as ops.textstats.quality)."""
-    tok = tokens(F.col(text_col))
-    n = F.size(tok)
-    alpha = F.size(F.filter(tok, lambda t: t.rlike("[A-Za-z]")))
-    return df.withColumn("_n_tok", n).filter(
-        (F.col("_n_tok") >= MIN_TOKENS)
-        & (alpha / F.col("_n_tok") >= MIN_ALPHA_RATIO)
-    )
+def _make_feature_udf():
+    """The per-document feature UDF: text → ``FEATURES`` struct.
+
+    Each field equals the Spark definition it replaces: ``n_tok`` is
+    ``size(ops.common.tokens(text))``; ``keep`` is the quality floor
+    (``n_tok >= MIN_TOKENS`` and ``2 * n_alpha >= n_tok``, where a
+    token is alpha when it holds an ASCII letter); ``nq`` is minus
+    ops.textstats.quality_features' score scaled by 10^4 and rounded
+    half up, summed in the same order; ``sig`` and ``grams`` are the
+    ops.dedup MinHash signature and the ops.substring 8-gram hashes.
+    A null text gives a null ``n_tok`` and ``nq``, as ``size(null)``
+    does; an empty one a null ``nq``."""
+    stop = frozenset(STOPWORDS)
+    alpha = re.compile("[A-Za-z]").search
+
+    @pandas_udf(FEATURES)
+    def features(text: pd.Series) -> pd.DataFrame:
+        rows = []
+        for t in text:
+            if t is None:
+                rows.append((None, False, None, [], []))
+                continue
+            toks = [w for w in t.split(" ") if w]
+            n = len(toks)
+            n_alpha = sum(1 for w in toks if alpha(w))
+            nq = None
+            if n:
+                score = (0.4 * (sum(1 for w in toks if w in stop) / n)
+                         + 0.3 * (len(set(toks)) / n)
+                         + 0.3 * min(n / 50.0, 1.0))
+                nq = -math.floor(score * 10000.0 + 0.5)
+            rows.append((n, n >= MIN_TOKENS and 2 * n_alpha >= n, nq,
+                         minhash_signature(t), _gram_hashes(t)))
+        return pd.DataFrame(rows, columns=FEATURES.names, dtype=object)
+
+    return features
+
+
+def _make_rebuild_udf():
+    """The span-strip rebuild: (text, hit positions) → ``REBUILT``.
+    A token is covered when it lies in ``[pos, pos + GRAM_N - 1]`` of
+    any hit; the kept tokens are joined with single spaces, so a row
+    without hits comes back with its whitespace runs collapsed."""
+
+    @pandas_udf(REBUILT)
+    def rebuild(text: pd.Series, hits: pd.Series) -> pd.DataFrame:
+        rows = []
+        for t, hp in zip(text, hits):
+            if t is None:
+                rows.append((None, None, None))
+                continue
+            toks = [w for w in t.split(" ") if w]
+            covered = set()
+            if hp is not None:
+                for p in hp:
+                    covered.update(range(p, p + GRAM_N))
+            kept = [w for i, w in enumerate(toks) if i not in covered]
+            rows.append((" ".join(kept), len(kept), len(toks) - len(kept)))
+        return pd.DataFrame(rows, columns=REBUILT.names, dtype=object)
+
+    return rebuild
+
+
+def add_features(df: DataFrame, text_col: str = "text_extracted") -> DataFrame:
+    """Attach the ``_f`` feature struct (see :func:`_make_feature_udf`)
+    that stages 4-7 read; a narrow projection, one UDF call per row."""
+    return df.withColumn("_f", _make_feature_udf()(F.col(text_col)))
+
+
+def quality_floor(df: DataFrame) -> DataFrame:
+    """Stage 4: keep the rows whose ``_f.keep`` verdict passes the
+    floor: at least MIN_TOKENS tokens, at least half of them carrying
+    an ASCII letter (an integer gate, ``2 * n_alpha >= n_tok``)."""
+    return df.filter(F.col("_f.keep"))
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text_extracted") -> DataFrame:
@@ -183,37 +277,20 @@ def exact_dedup(df: DataFrame, text_col: str = "text_extracted") -> DataFrame:
     )
 
 
-def neardup_collapse(df: DataFrame, text_col: str = "text_extracted") -> DataFrame:
+def neardup_collapse(df: DataFrame) -> DataFrame:
     """Stage 6: banded MinHash-LSH collapse, keep the BEST-quality
     member per bucket (FineWeb-style keep-best; ties break to min
     url), i.e. the dedup_canonical policy applied at the job layer.
 
-    Reuses the oracle-verified signature machinery from ops/dedup.py
-    (Arrow numpy UDF — the interpreted-HOF spelling measured ~50x
-    slower there) and the shared quality formula from ops/textstats
-    (scan-local codegen, integer-scaled so the arg-max is exact).
-    Scale shape (PLANS.md §5): only ``(url, q_int, band keys)`` ever
-    shuffle — never text; a near-dup group shares at least one band
-    bucket, and the keeper rule (a doc survives only if it wins its
-    bucket in EVERY band) removes one side of every detected pair
-    deterministically: every url that loses some band is dropped by
-    one anti join.  Docs too short to shingle pass through untouched.
-    """
-    from pdf_parser_spark.ops.dedup import SHINGLE_N, _make_sig_udf, lsh_bands
-    from pdf_parser_spark.ops.textstats import quality_features
-
-    sig_udf = _make_sig_udf()
-    tok = tokens(F.col(text_col))
-    stop_ratio, diversity, length_sat = quality_features(tok)
-    q_int = F.floor(
-        (0.4 * stop_ratio + 0.3 * diversity + 0.3 * length_sat) * 10000.0
-        + 0.5
-    ).cast("long")
-    # the signature is empty exactly when the doc has < SHINGLE_N
-    # tokens; filtering on that BEFORE the UDF (not on its output)
-    # keeps the optimizer from evaluating the UDF once per consumer
-    sig = df.filter(F.size(tok) >= SHINGLE_N).select(
-        "url", (-q_int).alias("_nq"), sig_udf(F.col(text_col)).alias("sig")
+    Reads the signature and the negated quality score from ``_f``.
+    Only ``(url, nq, band keys)`` shuffle, never text; a near-dup
+    group shares at least one band bucket, and the keeper rule (a doc
+    survives only if it wins its bucket in EVERY band) removes one
+    side of every detected pair deterministically: every url that
+    loses some band is dropped by one anti join.  Docs too short to
+    shingle (empty signature) pass through untouched."""
+    sig = df.filter(F.size("_f.sig") > 0).select(
+        "url", F.col("_f.nq").alias("_nq"), F.col("_f.sig").alias("sig")
     )
     # arg-max quality = min of (-q, url) over the band bucket
     bucket = Window.partitionBy("band", "band_key")
@@ -233,60 +310,42 @@ def strip_repeated_spans(
     ACL'22 exact-substring dedup at the n-gram anchor —
     ops/substring.py documents the exactness argument) from EVERY
     carrier row.  Rows are transformed, never dropped; ``_n_tok`` is
-    recomputed and ``_tok_removed`` records the per-row strip count
-    for lineage.
+    the kept token count and ``_tok_removed`` the per-row strip count
+    for lineage.  Drops ``_f``.
 
-    Scale shape (same as the oracled stats op): one Arrow gram pass,
-    one dup-gram window over the gram hash, only (gram, id, pos)
-    triples shuffle, islands window partitioned per document.  The
-    rebuild drops covered token positions with an indexed array
-    filter — per-row cost O(n_tok × n_islands), islands typically ≤ a
-    few.
-    """
-    from pdf_parser_spark.ops.substring import (
-        _make_gram_udf,
-        dup_gram_hits,
-        merge_islands,
-    )
-
-    udf = _make_gram_udf()
-    grams = df.select(
-        id_col, F.posexplode(udf(F.col(text_col))).alias("pos", "g")
-    )
-    per_doc = (
-        merge_islands(dup_gram_hits(grams, id_col), id_col)
+    The gram hashes come from ``_f``; only (gram, id, pos) triples
+    shuffle, through one dup-gram window over the gram hash.  Each
+    document's hit positions are collected and joined back, and the
+    rebuild UDF keeps the tokens no hit covers."""
+    grams = df.select(id_col, F.posexplode("_f.grams").alias("pos", "g"))
+    hits = (
+        dup_gram_hits(grams, id_col)
         .groupBy(id_col)
-        .agg(F.collect_list(F.struct("s", "e")).alias("_iv"))
+        .agg(F.collect_list("pos").alias("_hp"))
     )
-    joined = df.join(per_doc, id_col, "left")
-    tok = tokens(F.col(text_col))
-    kept = F.filter(
-        tok,
-        lambda t, i: ~F.exists(
-            "_iv", lambda iv: (i >= iv["s"]) & (i <= iv["e"])
-        ),
-    )
-    kept = F.when(F.col("_iv").isNull(), tok).otherwise(kept)
+    rebuilt = _make_rebuild_udf()(F.col(text_col), F.col("_hp"))
     return (
-        joined.withColumn("_kept", kept)
-        .withColumn(
-            "_tok_removed", (F.size(tok) - F.size("_kept")).cast("long")
-        )
-        .withColumn(text_col, F.array_join("_kept", " "))
-        .withColumn("_n_tok", F.size("_kept"))
-        .drop("_iv", "_kept")
+        df.join(hits, id_col, "left")
+        .withColumn("_r", rebuilt)
+        .withColumns({
+            text_col: F.col("_r.text"),
+            "_n_tok": F.col("_r.n_tok"),
+            "_tok_removed": F.col("_r.removed"),
+        })
+        .drop("_f", "_hp", "_r")
     )
 
 
 def curate(extracted: DataFrame) -> tuple[DataFrame, list[dict]]:
     """Run the funnel; returns (curated DF, per-stage lineage rows).
 
-    The stages compose into one lazy plan, which is materialized once
-    by an eager ``localCheckpoint`` of the last stage; the caller
-    writes the checkpointed frame.  Each stage's row count is an
-    ``observe()`` metric of that single execution, which runs with
-    AQE's empty-relation rule off so that an emptied stage still
-    reports its count."""
+    The stages compose into lazy plans that run in two executions,
+    each an eager ``localCheckpoint``: admission through the feature
+    pass, then the quality floor through the span strip; the caller
+    writes the second, checkpointed frame.  Each stage's row count is
+    an ``observe()`` metric of its execution.  Both run with AQE's
+    empty-relation rule off, so that an emptied stage still reports
+    its count."""
     observed: list[tuple[str, Observation]] = []
 
     def stage(name: str, frame: DataFrame) -> DataFrame:
@@ -294,21 +353,22 @@ def curate(extracted: DataFrame) -> tuple[DataFrame, list[dict]]:
         observed.append((name, obs))
         return frame.observe(obs, F.count(F.lit(1)).alias("rows"))
 
-    s0 = stage("input", extracted)
-    # URL admission runs FIRST: the cheapest filter in the funnel (a
-    # scan-local projection over the url column, zero shuffle), so
-    # structurally-spammy pages never reach the content stages.
-    sA = stage("url_admitted", url_admission(s0))
-    s1 = stage("decoded", sA.filter(F.col("decode_error").isNull()))
-    s1b = stage("template_strip", strip_host_templates(s1))
-    s2 = stage("quality", quality_floor(s1b))
-    s3 = stage("exact_dedup", exact_dedup(s2))
-    s4 = stage("near_dedup", neardup_collapse(s3))
-    s5 = stage("span_dedup", strip_repeated_spans(s4))
     conf = extracted.sparkSession.conf
     prior = conf.get(EXCLUDED_RULES, None)
     conf.set(EXCLUDED_RULES, ",".join(filter(None, (prior, PROPAGATE_EMPTY))))
     try:
+        s0 = stage("input", extracted)
+        # URL admission runs FIRST: the cheapest filter in the funnel
+        # (a scan-local projection over the url column, zero shuffle),
+        # so structurally-spammy pages never reach the content stages.
+        sA = stage("url_admitted", url_admission(s0))
+        s1 = stage("decoded", sA.filter(F.col("decode_error").isNull()))
+        s1b = stage("template_strip", strip_host_templates(s1))
+        feats = add_features(s1b).localCheckpoint(eager=True)
+        s2 = stage("quality", quality_floor(feats))
+        s3 = stage("exact_dedup", exact_dedup(s2))
+        s4 = stage("near_dedup", neardup_collapse(s3))
+        s5 = stage("span_dedup", strip_repeated_spans(s4))
         curated = s5.localCheckpoint(eager=True)
     finally:
         if prior is None:

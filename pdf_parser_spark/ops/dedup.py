@@ -28,10 +28,12 @@ from pdf_parser_spark.ops.common import (
     dedup_corpus,
     h32,
     h32_sql,
+    h32_utf8,
     load_table,
     shingles_sql,
     tokens,
     tokens_sql,
+    word_grams_utf8,
 )
 
 MINHASH_K = 16          # signature length
@@ -111,42 +113,31 @@ def _shingle_hash_set(text: str) -> list[int]:
     to one value on the Spark side too, or set sizes / SimHash votes
     diverge between engines on the (rare but corpus-scale-real)
     within-document collision."""
-    import hashlib
-
     if not text:  # None / empty cell must not kill the task
         return []
-    toks = [t for t in text.split(" ") if t]
-    if len(toks) < SHINGLE_N:
+    return sorted({h32_utf8(g) for g in set(word_grams_utf8(text, SHINGLE_N))})
+
+
+_PERM_A = 2 * np.arange(MINHASH_K, dtype=np.int64) + 1
+_PERM_B = 12345 * np.arange(MINHASH_K, dtype=np.int64)
+
+
+def minhash_signature(text: str | None) -> list[int]:
+    """The MINHASH_K-long MinHash signature of ``text``: the min of
+    each :func:`_perm` over its shingle-hash set.  Empty when the text
+    has fewer than SHINGLE_N tokens."""
+    hs = _shingle_hash_set(text)
+    if not hs:
         return []
-    grams = {
-        " ".join(toks[i : i + SHINGLE_N])
-        for i in range(len(toks) - SHINGLE_N + 1)
-    }
-    return sorted(
-        {
-            int(hashlib.md5(g.encode("utf-8")).hexdigest()[:8], 16)
-            for g in grams
-        }
-    )
+    h = np.asarray(hs, dtype=np.int64)
+    sig = (h[None, :] * _PERM_A[:, None] + _PERM_B[:, None]) % MINHASH_PRIME
+    return sig.min(axis=1).tolist()
 
 
 def _make_sig_udf():
     @pandas_udf("array<long>")
     def minhash_sig(text: pd.Series) -> pd.Series:
-        a = 2 * np.arange(MINHASH_K, dtype=np.int64) + 1
-        b = 12345 * np.arange(MINHASH_K, dtype=np.int64)
-        out = []
-        for t in text:
-            hs = _shingle_hash_set(t)
-            if not hs:
-                out.append([])
-                continue
-            h = np.asarray(hs, dtype=np.int64)
-            sig = ((h[None, :] * a[:, None] + b[:, None]) % MINHASH_PRIME).min(
-                axis=1
-            )
-            out.append(sig.tolist())
-        return pd.Series(out)
+        return pd.Series([minhash_signature(t) for t in text])
 
     return minhash_sig
 

@@ -47,9 +47,11 @@ from pyspark.sql.functions import pandas_udf
 
 from pdf_parser_spark.ops.common import (
     h32_sql,
+    h32_utf8,
     load_table,
     tokens,
     tokens_sql,
+    word_grams_utf8,
 )
 
 GRAM_N = 8      # anchor width: spans >= 8 tokens are removed exactly
@@ -62,22 +64,9 @@ VIRAL_QUOTE = (
 def _gram_hashes(text: str) -> list[int]:
     """h32 of each overlapping word-{GRAM_N}-gram, in position order
     (position i covers tokens [i, i+GRAM_N-1], 0-based)."""
-    import hashlib
-
     if not text:  # None / empty cell must not kill the task
         return []
-    toks = [t for t in text.split(" ") if t]
-    if len(toks) < GRAM_N:
-        return []
-    return [
-        int(
-            hashlib.md5(
-                " ".join(toks[i : i + GRAM_N]).encode("utf-8")
-            ).hexdigest()[:8],
-            16,
-        )
-        for i in range(len(toks) - GRAM_N + 1)
-    ]
+    return [h32_utf8(g) for g in word_grams_utf8(text, GRAM_N)]
 
 
 def _make_gram_udf():

@@ -105,12 +105,13 @@ def test_curate_funnel(spark):
 
 def _funnel_plan(extracted):
     """The curate stages composed lazily, as ``curate()`` composes them,
-    without its observations or its checkpoint."""
+    without its observations or its checkpoints."""
     from jobs import curate as C
 
     df = C.url_admission(extracted).filter(F.col("decode_error").isNull())
-    for fn in (C.strip_host_templates, C.quality_floor, C.exact_dedup,
-               C.neardup_collapse, C.strip_repeated_spans):
+    df = C.add_features(C.strip_host_templates(df))
+    for fn in (C.quality_floor, C.exact_dedup, C.neardup_collapse,
+               C.strip_repeated_spans):
         df = fn(df)
     return df
 
@@ -211,7 +212,7 @@ def test_curate_strips_cross_document_repeated_span(spark):
     """Two otherwise-distinct survivors share one 10-token span: the
     span-dedup stage must blank it from BOTH carriers and leave the
     unique remainder byte-intact."""
-    from jobs.curate import strip_repeated_spans
+    from jobs.curate import add_features, strip_repeated_spans
 
     shared = " ".join(f"viral{i}" for i in range(10))
     a_head = " ".join(f"aa{i % 23} bb{i % 7} cc" for i in range(40))
@@ -223,7 +224,8 @@ def test_curate_strips_cross_document_repeated_span(spark):
             f"qq{i}" for i in range(30))),
     ]
     df = spark.createDataFrame(rows, "url string, text_extracted string")
-    out = {r.url: r.asDict() for r in strip_repeated_spans(df).collect()}
+    out = {r.url: r.asDict()
+           for r in strip_repeated_spans(add_features(df)).collect()}
 
     assert out["https://t/a"]["_tok_removed"] == 10
     assert out["https://t/b"]["_tok_removed"] == 10
@@ -287,3 +289,123 @@ def test_with_host_rank_passes_harmonic_through(spark):
         "host string, pagerank_e9 long, out_degree long",
     )
     assert "host_harmonic_e6" not in with_host_rank(curated, without).columns
+
+
+def test_feature_udf_matches_spark_definitions(spark):
+    """The feature UDF reproduces, field by field, the Spark column
+    definitions it replaced: ``size(tokens())``, the ``rlike`` alpha
+    count with the ``/``-based floor, ``q_int`` from
+    ``quality_features``, and the signature and gram UDFs."""
+    from jobs.curate import MIN_TOKENS, _make_feature_udf
+    from pdf_parser_spark.ops.common import tokens
+    from pdf_parser_spark.ops.dedup import _make_sig_udf
+    from pdf_parser_spark.ops.substring import _make_gram_udf
+    from pdf_parser_spark.ops.textstats import STOPWORDS, quality_features
+
+    texts = [
+        None,
+        "",
+        "    ",
+        "  lead  runs   of    spaces trail  ",
+        "one",                                  # 1-2 tokens: < SHINGLE_N
+        "one two",
+        "one two three",                        # 3-7 tokens: < GRAM_N
+        "alpha beta gamma delta eps zeta eta",
+        " ".join(f"w{i % 17}" for i in range(50)),  # length_sat == 1
+        " ".join(STOPWORDS * 3),
+        "café naïve 東京 straße ñandú ünïcödé ok",
+        "東京 大阪 京都 札幌 福岡 神戸",      # no ASCII letter
+        "a1 b2 c3 11 22 33 44",                # n_tok 7, n_alpha 3
+        "a1 b2 c3 11 22 33",                   # n_tok 6, n_alpha 3
+        _LONG,
+    ]
+    # (n_tok, distinct, stopwords) whose score lands on a rounding edge:
+    # summing the three quality terms in another order moves q_int by 1
+    for n_tok, distinct, n_stop in ((16, 7, 1), (32, 26, 3), (48, 15, 3)):
+        words = STOPWORDS[:n_stop] + [f"w{i}" for i in range(distinct - n_stop)]
+        texts.append(" ".join(words + [words[-1]] * (n_tok - distinct)))
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    tok = tokens(F.col("t"))
+    n = F.size(tok)
+    alpha = F.size(F.filter(tok, lambda w: w.rlike("[A-Za-z]")))
+    stop_ratio, diversity, length_sat = quality_features(tok)
+    q_int = F.floor(
+        (0.4 * stop_ratio + 0.3 * diversity + 0.3 * length_sat) * 10000.0
+        + 0.5
+    ).cast("long")
+    old = df.select(
+        "i",
+        n.alias("n_tok"),
+        F.coalesce(
+            (n >= MIN_TOKENS) & (alpha / n >= 0.5), F.lit(False)
+        ).alias("keep"),
+        F.when(n > 0, -q_int).alias("nq"),
+        _make_sig_udf()(F.col("t")).alias("sig"),
+        _make_gram_udf()(F.col("t")).alias("grams"),
+    )
+    new = df.select("i", _make_feature_udf()(F.col("t")).alias("f")).select(
+        "i", "f.*"
+    )
+    assert new.columns == old.columns
+    want = {r.i: r.asDict() for r in old.collect()}
+    got = {r.i: r.asDict() for r in new.collect()}
+    assert set(got) == set(want) == set(range(len(texts)))
+    for i in want:
+        for field in old.columns:
+            assert got[i][field] == want[i][field], (texts[i], field)
+    # the fixture reaches both sides of the floor and of each guard
+    assert {r["keep"] for r in got.values()} == {True, False}
+    assert got[12]["keep"] is False and got[13]["keep"] is True
+    assert any(r["sig"] and not r["grams"] for r in got.values())
+
+
+def test_curate_runs_each_python_udf_once_before_any_shuffle(spark, tmp_path):
+    """In curate's executed plans the feature UDF and the rebuild UDF
+    each appear once, and the feature UDF runs in the scan's
+    partitions: no shuffle Exchange below it (the host-template
+    table reaches it through a broadcast)."""
+    extracted = run_extract(_pages(spark), fmt="txt", threshold=100_000)
+    src = str(tmp_path / "extracted")
+    extracted.write.parquet(src)
+    sql = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = sql.executionsList()
+        return [seq.apply(i).executionId() for i in range(seq.size())]
+
+    mark = max(executions(), default=-1)
+    curate(spark.read.parquet(src))
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+    udf_nodes = {"features": [], "rebuild": []}
+    for eid in executions():
+        if eid <= mark:
+            continue
+        graph = sql.planGraph(eid)
+        nodes = {
+            n.id(): n
+            for n in (graph.allNodes().apply(i)
+                      for i in range(graph.allNodes().size()))
+        }
+        children: dict[int, list[int]] = {}
+        for e in (graph.edges().apply(i) for i in range(graph.edges().size())):
+            children.setdefault(e.toId(), []).append(e.fromId())
+        for nid, node in nodes.items():
+            if node.name() != "ArrowEvalPython":
+                continue
+            for name in udf_nodes:
+                if f"[{name}(" in node.desc():
+                    udf_nodes[name].append((nodes, children, nid))
+    assert {k: len(v) for k, v in udf_nodes.items()} == {
+        "features": 1, "rebuild": 1
+    }
+
+    nodes, children, root = udf_nodes["features"][0]
+    below, stack = set(), [root]
+    while stack:
+        for c in children.get(stack.pop(), []):
+            if c not in below and nodes[c].name() != "BroadcastExchange":
+                below.add(c)
+                stack.append(c)
+    assert any("Scan" in nodes[c].name() for c in below)
+    assert not any(nodes[c].name() == "Exchange" for c in below)

@@ -84,3 +84,40 @@ def test_adjacent_coverage_merges_into_one_span(spark, tmp_path):
     assert got[1]["n_spans"] == 1
     assert got[1]["n_covered"] == 2 * GRAM_N
     assert got[1]["covered_x100"] == 100
+
+
+def _h32_hexdigest(gram: str) -> int:
+    """The h32 spec as the oracles spell it: md5 hex prefix → int."""
+    import hashlib
+
+    return int(hashlib.md5(gram.encode("utf-8")).hexdigest()[:8], 16)
+
+
+def test_gram_hashes_match_the_hexdigest_spelling():
+    """The 8-gram and 3-shingle hashes, sliced from the encoded text,
+    equal the join-then-hexdigest spelling on texts whose tokens are
+    not single-spaced or not ASCII."""
+    from pdf_parser_spark.ops.dedup import SHINGLE_N, _shingle_hash_set
+    from pdf_parser_spark.ops.substring import _gram_hashes
+
+    texts = [
+        None,
+        "",
+        "   ",
+        "a b",
+        " a  b c ",
+        "one two three four five six seven eight",
+        "  one two  three four five six seven eight nine  ",
+        "café naïve 東京 straße ñandú ünïcödé ok\tx y\nz end",
+        " ".join(f"w{i % 5}" for i in range(40)),
+    ]
+    for t in texts:
+        toks = [w for w in (t or "").split(" ") if w]
+        grams = [" ".join(toks[i : i + GRAM_N])
+                 for i in range(len(toks) - GRAM_N + 1)]
+        shingles = {" ".join(toks[i : i + SHINGLE_N])
+                    for i in range(len(toks) - SHINGLE_N + 1)}
+        assert _gram_hashes(t) == [_h32_hexdigest(g) for g in grams], t
+        assert _shingle_hash_set(t) == sorted(
+            {_h32_hexdigest(g) for g in shingles}
+        ), t
