@@ -128,9 +128,8 @@ def _extract_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from pdf_parser_spark.ops import all_queries
 
-    # The driver's correctness pass reads the first 50 entries: the two
-    # extract entries, then the ops in registry order, where the ops of
-    # the jobs' and streams' modules lead (see ops/__init__.py).
+    # The driver's correctness pass reads at most 50 entries: the two
+    # extract entries plus every registry op.
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     out["extract_pages"] = _extract_pages
     out["extract_formats"] = _extract_formats

@@ -155,9 +155,9 @@ def strip_host_templates(
             (F.col("_n") >= MIN_DOCS)
             & (F.col("_tlen") >= TEMPLATE_MIN_LEN)
             # a FULL-cap LCP means the host's docs are identical as
-            # far as we looked — that is a mirror (host_diversity's
-            # signal, exact dedup's job), not a banner; the banner
-            # evidence is a prefix that visibly ENDS inside the cap
+            # far as we looked: the host mirrors one page, which exact
+            # dedup removes; it is not a banner.  The banner evidence
+            # is a prefix that visibly ENDS inside the cap
             & (F.col("_tlen") < PREFIX_CAP)
         )
         .select(
@@ -279,8 +279,8 @@ def exact_dedup(df: DataFrame, text_col: str = "text_extracted") -> DataFrame:
 
 def neardup_collapse(df: DataFrame) -> DataFrame:
     """Stage 6: banded MinHash-LSH collapse, keep the BEST-quality
-    member per bucket (FineWeb-style keep-best; ties break to min
-    url), i.e. the dedup_canonical policy applied at the job layer.
+    member per bucket (FineWeb-style keep-best: the highest quality
+    score wins, ties break to the min url).
 
     Reads the signature and the negated quality score from ``_f``.
     Only ``(url, nq, band keys)`` shuffle, never text; a near-dup

@@ -2,7 +2,7 @@
 
 Corpus-level operators around the extraction pipeline (SURVEY.md §2):
 deduplication, text analysis, link analysis, splits, sketches, url
-admission and the corpus-curation, filtering and multimodal families.
+admission and the filtering and multimodal families.
 Each operator is a Spark-first DataFrame plan (built-in functions, no
 per-row Python except the explicitly-stubbed multimodal decode) with
 a DuckDB oracle-SQL twin for the driver's correctness gate.
@@ -14,9 +14,7 @@ Registry contract: every module exposes ``QUERIES: dict[name ->
 import importlib
 
 # Modules the jobs and streaming queries import, directly or through
-# one another.  Their ops lead the registry, so they always fall inside
-# the first 50 ``__spark_entry__.queries()`` entries that the driver's
-# correctness pass reads (tests/test_ops_parity.py::test_entry_smoke).
+# one another.
 PRODUCT_MODULES = (
     "dedup",
     "textstats",
@@ -30,25 +28,19 @@ PRODUCT_MODULES = (
     "urlquality",
 )
 
-# Modules only the registry uses; their ops follow in this order.
+# Modules only the registry uses.  The driver's correctness pass reads
+# at most 50 ``__spark_entry__.queries()`` entries, so the registry
+# holds no more than that (tests/test_ops_parity.py::test_entry_smoke).
 REGISTRY_MODULES = (
-    "webcorpus",
-    "curation",
     "pdfimages",
     "avmeta",
-    "drift",
     "blocklist",
-    "canonical",
     "ablation",
     "winnow",
     "scriptmix",
     "multimodal",
     "filtering",
     "heuristics",
-    "recrawl",
-    "pipeline",
-    "editverify",
-    "selection",
 )
 
 

@@ -17,7 +17,7 @@ admitted iff its domain is not category-listed AND ``kw_score < 2``
 — one hard word or two soft words is enough to block.
 
 The driver's tables carry no URLs, so both engines derive the
-identical log from ``documents`` (the ops/webcorpus.py convention):
+identical log from ``documents``:
 domain from a 10-way pool (three of which are category-listed) and a
 5-way path shape that plants hard/soft words in known slots.  On a
 real corpus the derivation disappears and the same plan runs over the

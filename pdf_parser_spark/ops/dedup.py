@@ -157,8 +157,7 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     that makes the set empty (< SHINGLE_N tokens): filtering on
     ``size(shs)`` AFTER the UDF puts one evaluation in the Filter and
     a second in the Project — Arrow UDF extraction is per-operator, so
-    the expensive shingle hash ran TWICE per row (measured: this
-    doubling was most of dedup_edit_verify's 6.7 s)."""
+    the expensive shingle hash ran TWICE per row."""
     corpus = dedup_corpus(spark, sf_dir).filter(
         F.size(tokens(F.col("text"))) >= SHINGLE_N
     )
@@ -276,12 +275,9 @@ sigs AS (
     )
 
 
-def _lsh_pairs_sql() -> str:
-    """Prelude + band/pair CTEs — the candidate-pair stage shared by
-    the LSH estimate query and the edit-distance verification op."""
-    return (
-        _minhash_sql_prelude()
-        + f""",
+DEDUP_MINHASH_LSH_SQL = (
+    _minhash_sql_prelude()
+    + f""",
 bands AS (
   SELECT doc_id, sig, g.b AS band,
          md5(array_to_string(sig[g.b * {LSH_ROWS} + 1 : g.b * {LSH_ROWS} + {LSH_ROWS}], ',')) AS band_key
@@ -292,13 +288,6 @@ pairs AS (
   FROM bands a JOIN bands b
     ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
 )
-"""
-    )
-
-
-DEDUP_MINHASH_LSH_SQL = (
-    _lsh_pairs_sql()
-    + f"""
 SELECT doc_a, doc_b,
        round(len(list_filter([sig_a[i] = sig_b[i] for i in generate_series(1, {MINHASH_K})], x -> x))
              / {float(MINHASH_K)}, 4) AS est_jaccard

@@ -380,7 +380,7 @@ GROUP BY lang
 # rule of its host prefixes its path.
 #
 # The driver's tables carry no fetch log, so both engines derive the
-# identical one from `documents` (the ops/webcorpus.py convention):
+# identical one from `documents`:
 # host class from doc_id, path from a deterministic 4-way shape.  The
 # rules table is likewise derived per host class — so some hosts have
 # no rules at all (the common case) and some paths dodge every rule.

@@ -20,9 +20,9 @@ value-identical.
 
 Lines: the driver's synthetic ``documents.text`` is a single space-
 joined token stream, so both engines derive the SAME deterministic
-line structure used by ops/webcorpus.py line_dedup (fixed
-``LINE_WIDTH``-token lines) — the rules then read naturally (a line's
-last token carries the terminal punctuation, its first the bullet).
+line structure (fixed ``LINE_WIDTH``-token lines) — the rules then
+read naturally (a line's last token carries the terminal punctuation,
+its first the bullet).
 
 Scale: both operators are pure per-document array HOFs — zero
 shuffle, zero Python, whole-stage codegen end to end; the only
@@ -40,7 +40,8 @@ from pdf_parser_spark.ops.common import (
     tokens,
     tokens_sql,
 )
-from pdf_parser_spark.ops.webcorpus import LINE_WIDTH
+
+LINE_WIDTH = 4  # tokens per derived line
 
 # -- Gopher App. A1 thresholds (document level) ------------------------------
 G_MIN_WORDS, G_MAX_WORDS = 10, 100_000   # paper: 50; synthetic docs are short
@@ -60,7 +61,7 @@ C4_TERMINALS = (".", "!", "?", '"')
 
 
 def _doc_lines(tok):
-    """Fixed-width token lines (the line_dedup convention)."""
+    """Fixed-width token lines."""
     return F.transform(
         F.sequence(F.lit(1), F.size(tok), F.lit(LINE_WIDTH)),
         lambda s: F.array_join(F.slice(tok, s, LINE_WIDTH), " "),
@@ -250,7 +251,7 @@ FROM kept
 # log2 alone has no discrimination on a near-flat token distribution
 # (every bucket lands in one digit class).
 #
-# Scale (the dsir_select pattern): the bucket table is ≤ LM_BUCKETS
+# Scale: the bucket table is ≤ LM_BUCKETS
 # rows regardless of corpus size — the token stream partial-aggregates
 # map-side to ≤LM_BUCKETS rows per task before the one tiny exchange,
 # the counts broadcast back onto the stream, and the per-doc rollup

@@ -22,10 +22,10 @@ far from overflow (85 × 1e9 ≪ 2^63), so both engines run the
 both sides, so totals shrink monotonically but deterministically.
 
 The link graph is derived deterministically from ``documents`` (the
-driver's sf tables carry no urls — same convention as
-ops/webcorpus.py): each document lives on host ``h32(doc_id) % 60``
-and emits ``K_OUT`` outlinks to hosts ``h32(k || '|' || doc_id) % 60``;
-self-loops are dropped and parallel edges collapsed.
+driver's sf tables carry no urls): each document lives on host
+``h32(doc_id) % 60`` and emits ``K_OUT`` outlinks to hosts
+``h32(k || '|' || doc_id) % 60``; self-loops are dropped and parallel
+edges collapsed.
 
 Scale design (GraphX-Pregel-shaped, pure DataFrame):
 

@@ -1,10 +1,8 @@
 """Per-host template-prefix detection: shared-boilerplate banners.
 
-ops/webcorpus.py's ``line_dedup`` removes lines repeated ACROSS
-documents corpus-wide; this operator detects the per-HOST shared
-PREFIX — the nav/header banner a site's template stamps onto every
-page — by computing the longest common prefix (LCP) of all documents
-on a host.  Template detection by cross-page commonality is the
+This operator detects the per-HOST shared PREFIX — the nav/header
+banner a site's template stamps onto every page — by computing the
+longest common prefix (LCP) of all documents on a host.  Template detection by cross-page commonality is the
 classic boilerplate signal (Gibson et al. 2005, "The Volume and
 Evolution of Web Page Templates", WWW; CleanEval / boilerplate
 removal literature — all public); a host whose pages share a long

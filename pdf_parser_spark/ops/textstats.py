@@ -89,22 +89,16 @@ FROM tok
 
 
 def quality_features(tok):
-    """The shared quality formula (stopword ratio, lexical diversity,
-    length saturation): the SINGLE definition both the standalone
-    quality op and curation.corpus_select score with, so the audited
-    distribution and the end-to-end keep/reject verdict cannot drift.
-    Returns (stop_ratio, diversity, length_sat) raw columns."""
+    """The quality formula (stopword ratio, lexical diversity, length
+    saturation) the quality op scores with; curate's feature UDF
+    computes the same score per document (pinned by
+    tests/test_curate_job.py).  Returns (stop_ratio, diversity,
+    length_sat) raw columns."""
     n = F.size(tok)
     stop_ratio = _hits(tok, STOPWORDS).cast("double") / n
     diversity = F.size(F.array_distinct(tok)).cast("double") / n
     length_sat = F.least(n.cast("double") / F.lit(50.0), F.lit(1.0))
     return stop_ratio, diversity, length_sat
-
-
-def quality_score_col(tok):
-    """Rounded weighted quality score over :func:`quality_features`."""
-    stop_ratio, diversity, length_sat = quality_features(tok)
-    return roundn(0.4 * stop_ratio + 0.3 * diversity + 0.3 * length_sat, 4)
 
 
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,7 +24,7 @@ admitted iff ``spam_score < 3`` — one structural tell is tolerated,
 a combination is not.
 
 The driver's tables carry no URLs, so both engines derive the same
-crawl log from ``documents`` (the ops/webcorpus.py convention): five
+crawl log from ``documents``: five
 path shapes planting each structural tell in a known slot.  On a real
 corpus the derivation disappears and the identical projection runs
 over the pages table's url column.

@@ -57,9 +57,6 @@ def run_extract(
     pages: DataFrame,
     fmt: str = "txt",
     threshold: int = DEFAULT_HEAVY_TAIL_BYTES,
-    normal_partitions: int | None = None,
-    heavy_partitions: int | None = None,
-    bucket_normal: bool = False,
     page: int | None = None,
     extended_filters: bool = False,
 ) -> DataFrame:
@@ -72,22 +69,17 @@ def run_extract(
     narrow map would be the single largest cost in the whole job.
     Bucketing-by-url happens where it pays: on the **extracted output**
     (~10x smaller than the raw bytes) at write time, and on the heavy
-    class here.  ``bucket_normal=True`` restores the input-side
-    repartition for sources with pathological split skew.
+    class here.
 
     The heavy class is where compute skew lives (cost is unbounded
     above the threshold), so it IS spread via ``xxhash64(url)`` —
     one-giant-document-per-task-ish, never straggling a 2000-row
     partition.
     """
-    sc = pages.sparkSession.sparkContext
-    n_heavy = heavy_partitions or sc.defaultParallelism
+    n_heavy = pages.sparkSession.sparkContext.defaultParallelism
 
     classed = classify_size(pages, threshold)
     normal = classed.filter(F.col("size_class") == "normal")
-    if bucket_normal:
-        n_norm = normal_partitions or sc.defaultParallelism * 2
-        normal = normal.repartition(n_norm, F.xxhash64("url"))
     heavy = classed.filter(F.col("size_class") == "heavy").repartition(
         n_heavy, F.xxhash64("url")
     )

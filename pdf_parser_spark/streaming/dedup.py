@@ -1,9 +1,7 @@
 """Streaming cross-batch exact dedup (`applyInPandasWithState`).
 
-The batch twins are :func:`pdf_parser_spark.ops.dedup.dedup_exact`
-(whole-corpus collapse) and
-:func:`pdf_parser_spark.ops.filtering.incremental_dedup` (one new
-batch vs a frozen corpus).  This module is the *continuous* version:
+A batch exact dedup collapses a whole corpus, or checks one new
+batch against a frozen one.  This module is the *continuous* version:
 as page files land, a document is admitted iff its content hash has
 never been seen in ANY earlier micro-batch — the state store carries
 the seen-hash set across batches, so no batch ever re-scans corpus

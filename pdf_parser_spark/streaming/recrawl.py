@@ -1,15 +1,15 @@
 """Streaming recrawl monitor: per-url freshness verdicts with
 watermark-evicted state (`applyInPandasWithState` + EventTimeTimeout).
 
-The batch twin is :func:`pdf_parser_spark.ops.recrawl.crawl_delta`
-(two frozen crawls diffed per url).  This is the continuous version:
-as recrawled pages land, every arrival is classified against the
-url's LAST seen content signature — ``added`` (first sighting),
-``unchanged`` (same signature), ``changed`` (new signature) — and a
-url that is NOT re-crawled within the freshness TTL (in EVENT time,
-``warc_ts``) is evicted with a ``stale`` verdict, the streaming analog
-of the batch op's ``removed`` (a batch diff sees absence by comparing
-two complete crawls; a stream sees absence as elapsed crawl time).
+A batch recrawl diff compares two frozen crawls per url.  This is
+the continuous version: as recrawled pages land, every arrival is
+classified against the url's LAST seen content signature — ``added``
+(first sighting), ``unchanged`` (same signature), ``changed`` (new
+signature) — and a url that is NOT re-crawled within the freshness
+TTL (in EVENT time, ``warc_ts``) is evicted with a ``stale`` verdict,
+the streaming analog of a batch diff's ``removed`` (a batch diff sees
+absence by comparing two complete crawls; a stream sees absence as
+elapsed crawl time).
 
 Design:
 

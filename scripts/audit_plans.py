@@ -50,25 +50,6 @@ def main() -> None:
     checks.append(("pushdown-warc-ts", "warc_ts" in p.split("DataFilters")[-1][:200]
                    if "DataFilters" in p else False))
 
-    # 4b. contamination check broadcasts the benchmark side (the
-    # corpus side must never shuffle its grams to a benchmark join)
-    from pdf_parser_spark.ops.curation import contamination_ngram, pii_redact
-
-    p = plan_of(contamination_ngram(spark, "/root/testdata/sf0.001"))
-    checks.append(("contamination-broadcast-bench", "BroadcastHashJoin" in p))
-
-    # 4c. PII redaction stays a narrow codegen scan — no exchange,
-    # no Python
-    p = plan_of(pii_redact(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("pii-redact-narrow-codegen",
-         "Exchange" not in p and "ArrowEvalPython" not in p)
-    )
-
-    # 4d. contamination never materializes a corpus-wide gram table
-    p2 = plan_of(contamination_ngram(spark, "/root/testdata/sf0.001"))
-    checks.append(("contamination-no-corpus-cache", "InMemoryRelation" not in p2))
-
     # 4e. the skew-hardened jaccard self-join shuffles on the COMPOSITE
     # (mh0, band-emission) key, not mh0 alone
     from pdf_parser_spark.ops.dedup import dedup_ngram_jaccard
@@ -78,12 +59,6 @@ def main() -> None:
     checks.append(
         ("jaccard-composite-join-key", "mh0" in join_seg and "k#" in join_seg)
     )
-
-    # 4f. corpus_select broadcasts the benchmark gram side
-    from pdf_parser_spark.ops.curation import corpus_select
-
-    p = plan_of(corpus_select(spark, "/root/testdata/sf0.001"))
-    checks.append(("corpus-select-broadcast-bench", "BroadcastHashJoin" in p))
 
     # 4g. admission-control ops (ops/filtering.py)
     from pdf_parser_spark.ops.filtering import (
@@ -125,22 +100,6 @@ def main() -> None:
          and "ArrowEvalPython" not in p)
     )
 
-    # 4i. intradoc_dedup is fully narrow: no exchange, no Python
-    from pdf_parser_spark.ops.webcorpus import host_diversity, intradoc_dedup
-
-    p = plan_of(intradoc_dedup(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("intradoc-narrow-codegen",
-         "Exchange" not in p and "ArrowEvalPython" not in p)
-    )
-
-    # 4j. host_diversity shuffles only (host, md5) — text reduced to a
-    # hash in the scan, no Python
-    p = plan_of(host_diversity(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("hostdiversity-no-python", "ArrowEvalPython" not in p)
-    )
-
     # 4l. substring_dedup: the gram hasher is evaluated exactly once
     # (the duplicated-gram test is a window over the one gram relation,
     # not a self-join that would re-run the UDF per branch), and there
@@ -153,37 +112,6 @@ def main() -> None:
          p.count("ArrowEvalPython") == 1
          and "CartesianProduct" not in p and "NestedLoop" not in p)
     )
-
-    # 4m. dsir_select: the 256-row weight table is broadcast back onto
-    # the token stream (never a shuffled join), and the score plan has
-    # no Python — the whole feature/weight path is codegen
-    from pdf_parser_spark.ops.selection import dsir_select
-
-    p = plan_of(dsir_select(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("dsir-broadcast-weights",
-         "BroadcastHashJoin" in p and "ArrowEvalPython" not in p
-         and "CartesianProduct" not in p and "NestedLoop" not in p)
-    )
-
-    # 4n. dedup_edit_verify: the tail projection happens before the
-    # pair joins — no full `text` column may appear on the shuffle
-    # side of the verify joins (tails are derived in the scan-side
-    # Project), and levenshtein stays JVM-side
-    from pdf_parser_spark.ops.editverify import dedup_edit_verify
-
-    p = plan_of(dedup_edit_verify(spark, "/root/testdata/sf0.001"))
-    verify_stage = p.split("levenshtein")[0]
-    checks.append(
-        ("editverify-tails-projected-before-join",
-         "levenshtein" in p and "substr" in p
-         and "CartesianProduct" not in verify_stage)
-    )
-    # the O(TAIL_W^2) edit distance must run ONCE per pair (measured
-    # 7.1 s -> 1.6 s when the duplicated spelling was split into two
-    # Projects; CollapseProject must not re-inline it)
-    checks.append(("editverify-single-levenshtein",
-                   p.count("levenshtein") == 1))
 
     # 4o. crawl_priority: host-grained inputs only — the per-host agg
     # partial-combines before its exchange and no Python anywhere
@@ -271,38 +199,6 @@ def main() -> None:
              and "BatchEvalPython" not in p)
         )
 
-    # 4w. url_canonicalize: pure regexp/array codegen — narrow map
-    # stage, zero exchange, zero Python
-    from pdf_parser_spark.ops.webcorpus import url_canonicalize
-
-    p = plan_of(url_canonicalize(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("urlcanon-narrow-codegen",
-         "Exchange" not in p and "ArrowEvalPython" not in p
-         and "BatchEvalPython" not in p)
-    )
-
-    # 4y. crawl_delta: one full-outer hash/merge join over per-url
-    # aggregates; partial aggregation below the exchange (only one
-    # (url_key, rep, sig) row per url per batch is shuffled)
-    from pdf_parser_spark.ops.recrawl import anchor_text_stats, crawl_delta
-
-    p = plan_of(crawl_delta(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("crawldelta-partial-agg-narrow-join",
-         "partial_min" in p and "ArrowEvalPython" not in p
-         and "CartesianProduct" not in p and "NestedLoop" not in p)
-    )
-
-    # 4z. anchor_text_stats: host-grained aggregates with map-side
-    # partials, window top-1 over O(hosts x vocab), no Python
-    p = plan_of(anchor_text_stats(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("anchorstats-host-grained",
-         "partial_count" in p and "ArrowEvalPython" not in p
-         and "CartesianProduct" not in p and "NestedLoop" not in p)
-    )
-
     # 4aa. ccnet_lm_filter: the bucket table broadcasts back onto the
     # token stream (never a shuffled join of the corpus-sized side);
     # one small shuffled join remains legitimate: per-doc aggregates
@@ -314,21 +210,6 @@ def main() -> None:
         ("ccnet-broadcast-buckets",
          "BroadcastHashJoin" in p and "ArrowEvalPython" not in p
          and "CartesianProduct" not in p)
-    )
-
-    # 4ad. token_drift: the explosion collapses in a map-side partial
-    # sum before its exchange (shuffle volume O(vocab x partitions),
-    # never O(token instances)); the 1-row totals frame joins by
-    # broadcast; the top-K is a TakeOrdered, not a global sort; no
-    # Python anywhere
-    from pdf_parser_spark.ops.drift import token_drift
-
-    p = plan_of(token_drift(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("tokendrift-partial-agg-broadcast-totals",
-         "partial_sum" in p and "Broadcast" in p
-         and "TakeOrderedAndProject" in p
-         and "ArrowEvalPython" not in p)
     )
 
     # 4af. url_blocklist_filter: the category list joins by BROADCAST
@@ -366,27 +247,6 @@ def main() -> None:
          and "ArrowEvalPython" not in p
          and all("text" not in seg[:400]
                  for seg in p.split("Exchange hashpartitioning")[1:]))
-    )
-    spark.catalog.clearCache()
-
-    # 4ah. dedup_canonical: the per-cluster winner is a struct-max
-    # AGGREGATE (map-side combinable partial_max below the exchange),
-    # never a sort+Window over every (doc, cluster) row; the selection
-    # stage adds NO Python of its own (the only Arrow UDF in the plan
-    # is the upstream pair generator's shingle_hashes, reprinted under
-    # the cached cluster relation) and no row-at-a-time Python exists
-    # anywhere; no cartesian
-    from pdf_parser_spark.ops.canonical import dedup_canonical
-
-    p = plan_of(dedup_canonical(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("canonical-argmax-partial-agg-no-window",
-         "partial_max" in p
-         and "Window" not in p
-         and "CartesianProduct" not in p
-         and "BatchEvalPython" not in p
-         and all("shingle_hashes" in seg[:200]
-                 for seg in p.split("ArrowEvalPython ")[1:]))
     )
     spark.catalog.clearCache()
 

@@ -2,7 +2,9 @@
 dangling host that only ever appears as a link target) must produce
 the identical exact-integer ranks on both engines, and the fixed-point
 invariants must hold (every rank ≥ the damping base; total mass never
-exceeds the initial SCALE since dangling/floor loss only removes)."""
+exceeds the initial SCALE since dangling/floor loss only removes).
+crawl_priority's per-host doc counts must partition the corpus and its
+priority column must equal its defining formula exactly."""
 
 import os
 import sys
@@ -15,8 +17,10 @@ pyspark = pytest.importorskip("pyspark")
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pdf_parser_spark.ops.linkgraph import (  # noqa: E402
+    CRAWL_PRIORITY_SQL,
     PAGERANK_SQL,
     PR_SCALE,
+    crawl_priority,
     linkgraph_pagerank,
 )
 from scripts.parity_check import norm_rows  # noqa: E402
@@ -33,28 +37,44 @@ def spark():
     s.stop()
 
 
-def _write_docs(spark, tmp_path, n_docs):
-    rows = [(i, f"doc {i}", "en", "src0", 6) for i in range(n_docs)]
+def _write_docs(spark, tmp_path, rows):
     df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
+        [(i, t, "en", "src0", len(t)) for i, t in rows],
+        "doc_id long, text string, lang string, source string, n_chars long",
     )
     sf = str(tmp_path / "sf")
     df.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
     return sf
 
 
-@pytest.mark.parametrize("n_docs", [1, 3, 17])
-def test_pagerank_tiny_graph_parity_and_invariants(spark, tmp_path, n_docs):
-    sf = _write_docs(spark, tmp_path / str(n_docs), n_docs)
-    sdf = linkgraph_pagerank(spark, sf)
-    srows = [tuple(r) for r in sdf.collect()]
-    scols = sdf.columns
-
+def _duck(sf):
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{sf}/documents.parquet/*.parquet')"
     )
+    return con
+
+
+def _assert_parity(sdf, con, sql):
+    srows = [tuple(r) for r in sdf.collect()]
+    ddf = con.sql(sql)
+    assert sorted(sdf.columns) == sorted(ddf.columns)
+    assert norm_rows(sdf.columns, srows) == norm_rows(
+        ddf.columns, ddf.fetchall()
+    )
+    return srows, sdf.columns
+
+
+@pytest.mark.parametrize("n_docs", [1, 3, 17])
+def test_pagerank_tiny_graph_parity_and_invariants(spark, tmp_path, n_docs):
+    rows = [(i, f"doc {i}") for i in range(n_docs)]
+    sf = _write_docs(spark, tmp_path / str(n_docs), rows)
+    sdf = linkgraph_pagerank(spark, sf)
+    srows = [tuple(r) for r in sdf.collect()]
+    scols = sdf.columns
+
+    con = _duck(sf)
     ddf = con.sql(PAGERANK_SQL)
     assert sorted(scols) == sorted(ddf.columns)
     assert norm_rows(scols, srows) == norm_rows(ddf.columns, ddf.fetchall())
@@ -72,3 +92,21 @@ def test_pagerank_tiny_graph_parity_and_invariants(spark, tmp_path, n_docs):
     # mass only leaks (dangling drop + floor), never grows
     assert sum(r[1] for r in srows) <= PR_SCALE
     assert by_host  # non-empty
+
+
+def test_crawl_priority_partitions_docs_and_formula(spark, tmp_path):
+    rows = [(i, f"text of document {i}") for i in range(40)]
+    sf = _write_docs(spark, tmp_path, rows)
+    sdf = crawl_priority(spark, sf)
+    srows, cols = _assert_parity(sdf, _duck(sf), CRAWL_PRIORITY_SQL)
+    ix = {c: k for k, c in enumerate(cols)}
+    assert sum(r[ix["n_docs"]] for r in srows) == 40
+    ranks = {
+        r["host_id"]: r["pagerank_e9"]
+        for r in linkgraph_pagerank(spark, sf).collect()
+    }
+    for r in srows:
+        assert r[ix["priority_e9"]] == (
+            r[ix["pagerank_e9"]] * 1000
+        ) // (1 + r[ix["n_docs"]])
+        assert r[ix["pagerank_e9"]] == ranks[r[ix["host_id"]]]

@@ -105,12 +105,6 @@ def test_extract_plan_is_narrow_after_repartition(spark, pages_df):
     plan = run_extract(pages_df, threshold=100_000)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1  # heavy-class xxhash64(url) spread
 
-    # opt-in input-side bucketing for pathological split skew
-    bucketed = run_extract(
-        pages_df, threshold=100_000, bucket_normal=True
-    )._jdf.queryExecution().executedPlan().toString()
-    assert bucketed.count("Exchange") == 2
-
 
 def test_multiformat_single_parse_matches_engine(spark, pages_df):
     """extract_formats_udf (one parse, all formats) must equal the
@@ -208,3 +202,54 @@ def test_extended_filters_convert_error_rows_to_text(spark):
         e = extended[url]
         assert e["decode_error_kind"] is None, (cid, e["decode_error"])
         assert e["text_extracted"].rstrip("\x00") == want.rstrip("\x00"), cid
+
+
+def test_explicit_shuffle_partitions_win_over_a_non_numeric_cpu_count(
+    monkeypatch,
+):
+    """An explicit ``shuffle_partitions`` is used as given; only its
+    default falls back to 32 when SPARK_GRAFT_CPUS is not a count."""
+    from pyspark.sql import SparkSession
+
+    from pdf_parser_spark.spark.session import build_session
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "*")
+    monkeypatch.setattr(
+        SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
+    )
+    opts = build_session(master="local[2]", shuffle_partitions=3)
+    assert opts["spark.sql.shuffle.partitions"] == "3"
+    opts = build_session(master="local[2]")
+    assert opts["spark.sql.shuffle.partitions"] == "32"
+
+
+def test_udf_workers_import_the_package_outside_the_repo(tmp_path):
+    """A session built from another working directory still runs the
+    extraction UDF: its Python workers find ``pdf_parser_spark``
+    through the session, not through their working directory."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from fixtures.gen import build_html_corpus
+from pdf_parser_spark.engine import extract_document
+from pdf_parser_spark.spark.session import build_session
+from pdf_parser_spark.spark.udfs import with_extraction
+html = build_html_corpus()["article-simple"]
+spark = build_session("outside-repo", master="local[1]", shuffle_partitions=1)
+df = spark.createDataFrame([(bytearray(html),)], "html binary")
+row = with_extraction(df).select("text_extracted").first()
+print("SAME", row["text_extracted"] == extract_document(html)["text"] != "")
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "SAME True" in proc.stdout, proc.stdout

@@ -1,7 +1,7 @@
 """Streaming recrawl monitor: added/changed/unchanged transitions
 across micro-batches, event-time TTL eviction surfacing `stale`
-verdicts, replay idempotence, and agreement with the batch crawl_delta
-statuses.
+verdicts, replay idempotence, and agreement with the statuses of a
+batch diff of two crawls (added / unchanged / changed per url).
 
 Assertions key on per-url verdict SEQUENCES (ordered by batch id),
 not absolute batch ids — with event-time timeouts the microbatch
@@ -181,9 +181,10 @@ def test_late_arrival_behind_watermark_does_not_kill_query(
 
 
 def test_agrees_with_batch_crawl_delta_semantics(spark, tmp_path_factory):
-    """Feed the batch op's two crawls as two micro-batches (one page
-    per url per crawl).  For every url present in the new crawl, the
-    stream's second verdict must equal the batch diff's status."""
+    """Feed two crawls as two micro-batches (one page per url per
+    crawl).  For every url present in the new crawl, the stream's
+    second verdict must equal the batch diff's status: added when the
+    url is new, unchanged or changed by its content signature."""
     base = str(tmp_path_factory.mktemp("sr4"))
     inp, out, cp = f"{base}/in", f"{base}/out", f"{base}/cp"
 
