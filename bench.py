@@ -30,25 +30,23 @@ CORPUS_CACHE = "/tmp/pdf_parser_spark_bench"
 
 
 def host_probe() -> dict:
-    """Measure the host's ACTUAL parallel capacity (single-core vs
-    32-process-aggregate zlib throughput), with TWO working-set sizes
-    that separate the two physical limiters:
+    """Measure the host's ACTUAL parallel capacity: single-core vs
+    aggregate zlib throughput of one process per core this process may
+    run on (``os.sched_getaffinity``, the count perfbench's ``nproc()``
+    uses), so an idle host reads near 1 whatever its core count.  Two
+    working-set sizes separate the two physical limiters:
 
-    - ``parallel_capacity_frac`` — 1 MiB buffers (the original probe).
-      At width 32 this streams ~27 GB/s of decompressed output, which
-      SATURATES THE DRAM of the 32-core host it was built on (~12 GB/s
-      ceiling measured idle: busy-loop capacity 0.945, 1 MiB zlib
-      capacity 0.483), so there it is a combined CPU+memory-bandwidth
-      deliverability number whose idle maximum is ~0.48.  It stays as
-      a continuity series vs rounds 1-5's recorded probes.
-    - ``cpu_capacity_frac`` — 64 KiB buffers (cache-resident, ~0.9 on
-      an idle host).  This isolates CPU-core deliverability from the
-      shared memory bus and is the right gate for "is a
-      hypervisor-steal epoch in progress"."""
+    - ``parallel_capacity_frac`` — 1 MiB buffers: decompressed output
+      streams through DRAM, so on a many-core host this is a combined
+      CPU+memory-bandwidth number whose idle maximum falls as the core
+      count outgrows the memory bus.
+    - ``cpu_capacity_frac`` — 64 KiB buffers, cache-resident.  This
+      isolates CPU-core deliverability from the shared memory bus and
+      is the right gate for "is a hypervisor-steal epoch in progress"."""
     import multiprocessing as mp
     import zlib
 
-    width = 32
+    width = len(os.sched_getaffinity(0))
 
     def mk(kib: int) -> bytes:
         return zlib.compress(bytes(range(256)) * (kib * 4), 6)

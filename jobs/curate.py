@@ -427,25 +427,21 @@ def main() -> None:
     spark = build_session("pdf-parser-spark-curate", master=args.master)
     extracted = spark.read.parquet(args.input)
     curated, funnel = curate(extracted)
-    if args.host_ranks:
-        curated = with_host_rank(curated, spark.read.parquet(args.host_ranks))
-    # The token count ships in the output as `n_tokens` — a useful
-    # lineage column — so the composition aggregate reads the WRITTEN
-    # table back instead of re-traversing the funnel.
-    curated.withColumnRenamed("_n_tok", "n_tokens").withColumnRenamed(
-        "_tok_removed", "span_tokens_removed"
-    ).write.mode("overwrite").parquet(f"{args.output}/data")
     comp = [
         r.asDict()
-        for r in spark.read.parquet(f"{args.output}/data")
-        .groupBy("doc_type")
+        for r in curated.groupBy("doc_type")
         .agg(
             F.count(F.lit(1)).alias("rows"),
-            F.sum("n_tokens").alias("tokens"),
-            F.sum("span_tokens_removed").alias("span_tokens_removed"),
+            F.sum("_n_tok").alias("tokens"),
+            F.sum("_tok_removed").alias("span_tokens_removed"),
         )
         .collect()
     ]
+    if args.host_ranks:
+        curated = with_host_rank(curated, spark.read.parquet(args.host_ranks))
+    curated.withColumnRenamed("_n_tok", "n_tokens").withColumnRenamed(
+        "_tok_removed", "span_tokens_removed"
+    ).write.mode("overwrite").parquet(f"{args.output}/data")
     report = {"funnel": funnel, "composition": comp}
     with open(f"{args.output}/funnel.json", "w") as f:
         json.dump(report, f, indent=2)

@@ -1,8 +1,8 @@
 """Training-data pipeline operators over the corpus tables.
 
 Corpus-level operators around the extraction pipeline (SURVEY.md §2):
-deduplication, text analysis, link analysis, splits, sketches, url
-admission and the filtering and multimodal families.
+deduplication, text analysis, link analysis, splits, url admission
+and the filtering and multimodal families.
 Each operator is a Spark-first DataFrame plan (built-in functions, no
 per-row Python except the explicitly-stubbed multimodal decode) with
 a DuckDB oracle-SQL twin for the driver's correctness gate.
@@ -21,10 +21,8 @@ PRODUCT_MODULES = (
     "linkgraph",
     "centrality",
     "splits",
-    "sketches",
     "substring",
     "template",
-    "temporal",
     "urlquality",
 )
 
@@ -34,10 +32,6 @@ PRODUCT_MODULES = (
 REGISTRY_MODULES = (
     "pdfimages",
     "avmeta",
-    "blocklist",
-    "ablation",
-    "winnow",
-    "scriptmix",
     "multimodal",
     "filtering",
     "heuristics",

@@ -11,7 +11,7 @@ max-merges every node's counter with its in-neighbors' counters, and
 ``H(v) ≈ Σ_t (|B_t| - |B_{t-1}|)/t`` from the counter estimates.  The
 reference engine has no graph layer; this adds the sketch-graph class
 alongside ops/linkgraph.py's exact-integer PageRank (same derived
-host graph) and ops/sketches.py's KMV/CMS.
+host graph).
 
 Why it oracles exactly: every step is an integer recurrence both
 engines replay bit-for-bit — registers are (node, bucket, rho) BIGINT

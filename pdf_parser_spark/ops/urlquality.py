@@ -1,9 +1,9 @@
 """URL-feature spam scoring: shape-based admission without a list.
 
-ops/blocklist.py gates on WHO the host is (a curated category list);
+A blocklist gates on WHO the host is (a curated category list);
 this operator gates on what the URL LOOKS like — the complementary,
 list-free first-stage filter every production web pipeline runs
-alongside the blocklist (RefinedWeb §2.2, Penedo et al. 2023,
+alongside one (RefinedWeb §2.2, Penedo et al. 2023,
 arXiv:2306.01116, scores "URLs with spam-correlated shapes";
 FineWeb's url filtering, Penedo et al. 2024 — both public).  SEO-spam
 and auto-generated pages betray themselves structurally: digit-heavy

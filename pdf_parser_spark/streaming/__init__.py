@@ -1,17 +1,3 @@
 from pdf_parser_spark.streaming.job import stream_extract
-from pdf_parser_spark.streaming.sessionize import (
-    final_sessions,
-    stream_sessionize,
-)
-from pdf_parser_spark.streaming.windows import (
-    batch_window_counts,
-    stream_window_counts,
-)
 
-__all__ = [
-    "stream_extract",
-    "stream_sessionize",
-    "final_sessions",
-    "stream_window_counts",
-    "batch_window_counts",
-]
+__all__ = ["stream_extract"]

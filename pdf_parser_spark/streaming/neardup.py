@@ -37,10 +37,10 @@ Design:
   the stateful operator on a stateless union branch and are always
   admitted — mirroring the batch ops, where unshingleable docs never
   enter the index.
-* **Idempotent sink** — per-batch ``batch_id=N`` overwrite with the
-  replay guard from :mod:`streaming.dedup` (a replayed batch must
-  still execute the stateful plan so state commits stay aligned with
-  the checkpoint).
+* **Idempotent sink** — per-batch ``batch_id=N`` overwrite guarded
+  by :func:`streaming.job._committed` (a replayed batch must still
+  execute the stateful plan so state commits stay aligned with the
+  checkpoint).
 """
 
 from __future__ import annotations
@@ -206,10 +206,10 @@ def stream_neardup(
     # query, and even the lenient cast leaves invalid bytes that the
     # Arrow transfer to the signature UDF rejects.  try_validate_utf8
     # nulls non-UTF8 payloads -> empty text -> empty signature -> the
-    # stateless bypass branch (admitted): binary content is exactly
-    # what the CONTENT-HASH monitor (streaming/dedup.py) covers, not
-    # text LSH.  In the production funnel this monitor consumes the
-    # EXTRACTED-text stream, where the column is already a string.
+    # stateless bypass branch (admitted): binary content is a case
+    # for a content hash, not text LSH.  In the production funnel this
+    # monitor consumes the EXTRACTED-text stream, where the column is
+    # already a string.
     pages = reader.parquet(input_path).select(
         "url",
         "warc_ts",

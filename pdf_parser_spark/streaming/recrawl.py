@@ -23,13 +23,12 @@ Design:
   later arrivals) passes it.  This also keeps the availableNow drain
   terminating: processing-time timeouts hold the query open waiting
   for wall-clock deadlines, event-time timeouts resolve from the
-  data.  The other stateful ops here carry NoTimeout state that grows
-  with the corpus; this op demonstrates the eviction half of the
-  state API.
+  data.
 * **Idempotent sink** — per-batch ``batch_id=N`` partition overwrite
-  with the replay guard from :mod:`streaming.dedup` (a replayed batch
-  must still execute the stateful plan so state commits stay aligned
-  with the checkpoint).
+  guarded by :func:`streaming.job._committed`: a replayed batch whose
+  output is already committed is not rewritten, but still executes
+  the stateful plan (into a noop sink), because state only commits
+  when the batch plan runs.
 """
 
 from __future__ import annotations
@@ -154,8 +153,8 @@ def stream_recrawl(
         out_dir = f"{output_path}/verdicts/batch_id={batch_id}"
         if _committed(batch_df.sparkSession, out_dir):
             # replay guard: the stateful plan must still execute so
-            # state commits stay aligned with the checkpoint (see
-            # streaming/dedup.py)
+            # state commits stay aligned with the checkpoint; a noop
+            # sink runs it at zero I/O
             batch_df.write.format("noop").mode("overwrite").save()
             return
         batch_df.write.mode("overwrite").parquet(out_dir)

@@ -149,17 +149,6 @@ def main() -> None:
          and "ArrowEvalPython" not in p)
     )
 
-    # 4s. heavy_hitters_cms: the sketch grid partial-combines map-side
-    # before its exchange and the probe side joins broadcast
-    from pdf_parser_spark.ops.sketches import heavy_hitters_cms
-
-    p = plan_of(heavy_hitters_cms(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("cms-partial-agg-broadcast-probe",
-         "partial_count" in p and "BroadcastHashJoin" in p
-         and "ArrowEvalPython" not in p)
-    )
-
     # 4t. crawl_schedule: exactly ONE exchange (the per-host window's
     # hash partitioning) — politeness serializes hosts anyway
     from pdf_parser_spark.ops.linkgraph import crawl_schedule
@@ -212,20 +201,6 @@ def main() -> None:
          and "CartesianProduct" not in p)
     )
 
-    # 4af. url_blocklist_filter: the category list joins by BROADCAST
-    # and the op is row-per-input — zero hash-partition exchanges at
-    # any corpus size; keyword scoring is scan-local JVM contains (no
-    # Python)
-    from pdf_parser_spark.ops.blocklist import url_blocklist_filter
-
-    p = plan_of(url_blocklist_filter(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("blocklist-broadcast-no-shuffle",
-         "BroadcastHashJoin" in p
-         and "Exchange hashpartitioning" not in p
-         and "ArrowEvalPython" not in p)
-    )
-
     # 4ag. host_centrality_hyperball: every radius step reads the
     # PERSISTED register/edge relations (InMemoryTableScan — the
     # corpus parquet is scanned once, not once per radius), merges are
@@ -250,34 +225,13 @@ def main() -> None:
     )
     spark.catalog.clearCache()
 
-    # 4ai. filter_overlap_matrix: all pairwise joint counts live in ONE
-    # partial-aggregated conditional-sum reduce (no filter-to-filter
-    # join, no cartesian); the only non-equi join in the whole plan is
-    # ccnet's sanctioned 1-row percentile cross
-    from pdf_parser_spark.ops.ablation import filter_overlap_matrix
-
-    p = plan_of(filter_overlap_matrix(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("ablation-single-partial-agg-reduce",
-         "partial_sum" in p
-         and "CartesianProduct" not in p
-         and p.count("BroadcastNestedLoopJoin") <= 1)
-    )
-    spark.catalog.clearCache()
-
-    # 4aj. url_spam_score and text_script_detect are pure scan-local
-    # projections: zero exchanges, zero Python, at any corpus size
-    from pdf_parser_spark.ops.scriptmix import text_script_detect
+    # 4aj. url_spam_score is a pure scan-local projection: zero
+    # exchanges, zero Python, at any corpus size
     from pdf_parser_spark.ops.urlquality import url_spam_score
 
     p = plan_of(url_spam_score(spark, "/root/testdata/sf0.001"))
     checks.append(
         ("urlquality-scan-local",
-         "Exchange" not in p and "Python" not in p)
-    )
-    p = plan_of(text_script_detect(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("scriptmix-scan-local",
          "Exchange" not in p and "Python" not in p)
     )
 

@@ -51,3 +51,12 @@ def test_summary_line_slims_before_dropping():
     assert "queries_note" in parsed
     if "queries" in parsed:
         assert all(v >= 0.1 for v in parsed["queries"].values())
+
+
+def test_host_probe_width_follows_cpu_affinity(monkeypatch):
+    # one worker per core the process may run on: a 1-core affinity
+    # set probes with one process, not a fixed 32
+    monkeypatch.setattr(bench.os, "sched_getaffinity", lambda pid: {0})
+    probe = bench.host_probe()
+    assert "agg1_ops" in probe and "agg32_ops" not in probe
+    assert probe["cpu_capacity_frac"] > 0

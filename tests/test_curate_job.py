@@ -4,6 +4,10 @@ near-dup collapse (keep-BEST-quality member, ties to min url), and
 the funnel lineage report."""
 
 import datetime
+import json
+import os
+import subprocess
+import sys
 
 import pytest
 
@@ -140,6 +144,47 @@ def test_curate_runs_few_spark_jobs(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert funnel[-1]["rows"] == 3
     assert len(sc.statusTracker().getJobIdsForGroup("curate-job-bound")) <= 16
+
+
+def test_curate_cli_end_to_end(spark, tmp_path):
+    """jobs/curate.py as submitted: funnel.json's composition covers
+    exactly the written rows (it sums to the funnel's last stage) and
+    agrees with an aggregate of the written data per doc_type."""
+    from fixtures.gen import build_pdf_corpus
+
+    pdfs = build_pdf_corpus()
+    pdf_rows = [
+        (f"https://t/{name}.pdf", _TS, bytearray(pdfs[name]), "", "en")
+        for name in ("headings-page", "paragraph-gaps")
+    ]
+    pages = _pages(spark).unionByName(
+        spark.createDataFrame(pdf_rows, PAGES_STREAM_SCHEMA)
+    )
+    inp, out = str(tmp_path / "extracted"), str(tmp_path / "curated")
+    run_extract(pages, fmt="txt", threshold=100_000).write.parquet(inp)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, os.path.join(repo, "jobs", "curate.py"),
+         "--input", inp, "--output", out, "--master", "local[2]"],
+        capture_output=True, text=True, timeout=300,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2"},
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    report = json.load(open(f"{out}/funnel.json"))
+    comp = sorted(report["composition"], key=lambda c: c["doc_type"])
+    assert sum(c["rows"] for c in comp) == report["funnel"][-1]["rows"] == 5
+    written = (
+        spark.read.parquet(f"{out}/data")
+        .groupBy("doc_type")
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.sum("n_tokens").alias("tokens"),
+            F.sum("span_tokens_removed").alias("span_tokens_removed"),
+        )
+        .orderBy("doc_type")
+    )
+    assert comp == [w.asDict() for w in written.collect()]
+    assert [c["doc_type"] for c in comp] == ["html", "pdf"]
 
 
 def test_curate_counts_stages_that_empty_out(spark):

@@ -1,18 +1,25 @@
 """Streaming MinHash-LSH near-dup admission: cross-batch detection,
 batch⇄stream signature agreement, TTL state eviction re-admitting
-post-window near-dups, short-doc bypass, and replay idempotence."""
+post-window near-dups, short-doc bypass, replay idempotence, and the
+keeper-only verdict of one bucket."""
 
 import datetime
 
+import pandas as pd
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from pdf_parser_spark.ops.dedup import MINHASH_K, _make_sig_udf  # noqa: E402
+from pdf_parser_spark.ops.dedup import (  # noqa: E402
+    LSH_ROWS,
+    MINHASH_K,
+    _make_sig_udf,
+)
 from pdf_parser_spark.streaming.neardup import (  # noqa: E402
     SIM_THRESHOLD_16,
+    _neardup_group,
     admission_report,
     stream_neardup,
 )
@@ -178,3 +185,49 @@ def test_replay_is_idempotent(spark, tmp_path_factory):
     after = _verdict(spark, out)
     assert before == after
     assert not after["b"]["admitted"]
+
+
+class _StubState:
+    """The slice of ``GroupState`` that ``_neardup_group`` touches: a
+    fresh bucket, no timeout, watermark at 0."""
+
+    hasTimedOut = False
+    exists = False
+
+    def update(self, value):
+        self.value = value
+
+    def setTimeoutTimestamp(self, ts):
+        self.timeout = ts
+
+    def getCurrentWatermarkMs(self):
+        return 0
+
+
+def test_bucket_verdict_compares_against_the_opener_only():
+    """One band-0 bucket holds A (the opener), then B and C.  A shares
+    only the band rows with B and with C; B and C agree in 12 of 16
+    positions, a near-dup pair.  C is measured against A alone, reads
+    4 < 8 and is admitted: the keeper-only approximation the module
+    docstring states."""
+    band = list(range(LSH_ROWS))
+    a = band + [100 + i for i in range(MINHASH_K - LSH_ROWS)]
+    b = band + [200 + i for i in range(MINHASH_K - LSH_ROWS)]
+    c = band + [200 + i for i in range(8)] + [300 + i for i in range(4)]
+    assert sum(x == y for x, y in zip(b, c)) >= SIM_THRESHOLD_16
+    batch = pd.DataFrame({
+        "url": ["u/a", "u/b", "u/c"],
+        "warc_ts": [pd.Timestamp(_ts(s)) for s in (0, 1, 2)],
+        "sig": [a, b, c],
+    })
+    state = _StubState()
+    key = (0, ",".join(map(str, band)))
+    (out,) = list(_neardup_group(ttl_ms=1000)(key, iter([batch]), state))
+    rows = {r.url: r for r in out.itertuples()}
+
+    assert rows["u/a"].is_keeper and rows["u/a"].sim_16 == MINHASH_K
+    for u in ("u/b", "u/c"):
+        assert rows[u].keeper_url == "u/a" and not rows[u].is_keeper
+        assert rows[u].sim_16 == LSH_ROWS < SIM_THRESHOLD_16
+    # the bucket keeps the opener's signature only
+    assert state.value[:2] == ("u/a", ",".join(map(str, a)))
