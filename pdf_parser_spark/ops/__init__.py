@@ -2,10 +2,10 @@
 
 Corpus-level operators around the extraction pipeline (SURVEY.md §2):
 deduplication, text analysis, link analysis, splits, url admission
-and the filtering and multimodal families.
-Each operator is a Spark-first DataFrame plan (built-in functions, no
-per-row Python except the explicitly-stubbed multimodal decode) with
-a DuckDB oracle-SQL twin for the driver's correctness gate.
+and the filtering family.
+Each operator is a Spark-first DataFrame plan (built-in functions
+and, where a row needs Python, a vectorized Arrow UDF) with a DuckDB
+oracle-SQL twin for the value-exact correctness gate.
 
 Registry contract: every module exposes ``QUERIES: dict[name ->
 (callable(spark, sf_dir) -> DataFrame, oracle_sql | None)]``.
@@ -29,13 +29,7 @@ PRODUCT_MODULES = (
 # Modules only the registry uses.  The driver's correctness pass reads
 # at most 50 ``__spark_entry__.queries()`` entries, so the registry
 # holds no more than that (tests/test_ops_parity.py::test_entry_smoke).
-REGISTRY_MODULES = (
-    "pdfimages",
-    "avmeta",
-    "multimodal",
-    "filtering",
-    "heuristics",
-)
+REGISTRY_MODULES = ("filtering",)
 
 
 def all_queries():

@@ -399,9 +399,8 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     H = sum_t c_t * (L(n) - L(c_t)) // n, with L the interpolated
     binary log (ops/common.py log2_mbits).  Low entropy flags
     repetitive/boilerplate documents — the doc-INTERNAL diversity
-    signal, complementing text_repetition (top-n-gram fractions) and
-    ccnet_lm_filter (corpus-level surprisal).  Documents with no
-    tokens are not scored (the c4_line_filter convention).
+    signal, complementing text_repetition (top-n-gram fractions).
+    Documents with no tokens are not scored: they emit no row.
 
     Scale: explode -> (doc_id, token) partial-combined count ->
     (doc_id) partial-combined rollup.  Both aggregates are map-side

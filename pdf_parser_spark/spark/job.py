@@ -3,9 +3,6 @@ resume.
 
 Design (SURVEY.md §3.4, §4):
 
-* **Bucketed-by-url layout** — ``repartition(N, xxhash64(url))``
-  spreads documents uniformly; url is the identity key so reruns
-  co-locate.
 * **Heavy-tail routing** — extraction cost scales with payload size,
   which is invisible to AQE (a map-only stage has no shuffle for AQE
   to re-plan), so giant PDFs / megapage HTML are routed EXPLICITLY:
@@ -67,9 +64,6 @@ def run_extract(
     splits (``spark.sql.files.maxPartitionBytes``) are already
     compute-balanced — shuffling 100 TB of raw bytes in front of a
     narrow map would be the single largest cost in the whole job.
-    Bucketing-by-url happens where it pays: on the **extracted output**
-    (~10x smaller than the raw bytes) at write time, and on the heavy
-    class here.
 
     The heavy class is where compute skew lives (cost is unbounded
     above the threshold), so it IS spread via ``xxhash64(url)`` —
@@ -118,23 +112,3 @@ def resume_filter(pages: DataFrame, committed: DataFrame) -> DataFrame:
     convert to broadcast when the committed set is small."""
     return pages.join(committed.select("url"), on="url", how="left_anti")
 
-
-def write_output(
-    extracted: DataFrame, path: str, mode: str = "append",
-    buckets: int | None = None,
-) -> None:
-    """Parquet sink partitioned by size_class (Iceberg ``writeTo`` on
-    clusters with a catalog; partitionBy keeps the heavy tail isolated
-    for later audits and re-runs).  The OUTPUT is bucketed by
-    ``xxhash64(url)`` — this is where bucketing-by-url belongs: the
-    extracted text is ~10x smaller than the raw bytes, and the
-    url-clustered layout is what the resume anti-join and downstream
-    dedup joins key on."""
-    sc = extracted.sparkSession.sparkContext
-    n = buckets or sc.defaultParallelism * 2
-    (
-        extracted.repartition(n, F.xxhash64("url"))
-        .write.mode(mode)
-        .partitionBy("size_class")
-        .parquet(path)
-    )

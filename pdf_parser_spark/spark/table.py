@@ -175,7 +175,7 @@ class IcebergTable:
     def ensure(self, schema_ddl: str, partition_by: str = "size_class") -> None:
         """Create the table if missing (idempotent — safe from every
         resumed run).  Partitioning by size_class keeps the heavy tail
-        in its own files, mirroring write_output's parquet layout."""
+        in its own files."""
         self.spark.sql(
             f"CREATE TABLE IF NOT EXISTS {self.name} ({schema_ddl}) "
             f"USING iceberg PARTITIONED BY ({partition_by})"

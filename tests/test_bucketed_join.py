@@ -1,7 +1,8 @@
 """Bucketed-table co-located joins: the pre-partitioning story.
 
-write_output's xxhash64(url) repartition clusters FILES by url, which
-helps compaction and locality but still leaves downstream joins with
+The extracted table is partitioned by size_class at most (IcebergTable;
+SnapshotParquetTable writes each snapshot as plain parquet files), so
+nothing in its layout is keyed on url and downstream joins still plan
 an Exchange on each side.  True metastore bucketing (`bucketBy` +
 `saveAsTable`) records the hash layout in the catalog so a same-key
 same-bucket-count join is planned with ZERO exchanges — the pattern a
