@@ -2,7 +2,7 @@
 
 Corpus-level operators around the extraction pipeline (SURVEY.md §2):
 deduplication, text analysis, link analysis, splits, url admission
-and the filtering family.
+and the filtering and heuristics (Gopher/C4/CCNet) families.
 Each operator is a Spark-first DataFrame plan (built-in functions
 and, where a row needs Python, a vectorized Arrow UDF) with a DuckDB
 oracle-SQL twin for the value-exact correctness gate.
@@ -29,7 +29,10 @@ PRODUCT_MODULES = (
 # Modules only the registry uses.  The driver's correctness pass reads
 # at most 50 ``__spark_entry__.queries()`` entries, so the registry
 # holds no more than that (tests/test_ops_parity.py::test_entry_smoke).
-REGISTRY_MODULES = ("filtering",)
+REGISTRY_MODULES = (
+    "filtering",
+    "heuristics",
+)
 
 
 def all_queries():

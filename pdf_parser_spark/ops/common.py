@@ -190,7 +190,8 @@ def dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # powers of two, flaking the value-hash gate) plus the standard linear
 # interpolation between adjacent powers: L(x) = 1000*e + (x - 2^e)*1000
 # // 2^e.  Monotone non-decreasing, exact integers, engine-identical.
-# Used by ops/textstats.py (doc entropy).
+# Used by ops/heuristics.py (ccnet surprisal) and ops/textstats.py
+# (doc entropy).
 
 def log2_mbits(expr: str) -> Column:
     """Spark column: L(expr) where expr is a positive BIGINT SQL

@@ -173,6 +173,34 @@ def main() -> None:
          and p.count("Exchange hashpartitioning") == 1)
     )
 
+    # 4v. gopher/c4 heuristics: pure per-document array HOFs — zero
+    # exchange, zero Python
+    from pdf_parser_spark.ops.heuristics import (
+        c4_line_filter,
+        gopher_quality_filter,
+    )
+
+    for nm, fn in (("gopher-narrow-codegen", gopher_quality_filter),
+                   ("c4-narrow-codegen", c4_line_filter)):
+        p = plan_of(fn(spark, "/root/testdata/sf0.001"))
+        checks.append(
+            (nm, "Exchange" not in p and "ArrowEvalPython" not in p
+             and "BatchEvalPython" not in p)
+        )
+
+    # 4aa. ccnet_lm_filter: the bucket table broadcasts back onto the
+    # token stream (never a shuffled join of the corpus-sized side);
+    # one small shuffled join remains legitimate: per-doc aggregates
+    # against the 1-row percentile-cut relation
+    from pdf_parser_spark.ops.heuristics import ccnet_lm_filter
+
+    p = plan_of(ccnet_lm_filter(spark, "/root/testdata/sf0.001"))
+    checks.append(
+        ("ccnet-broadcast-buckets",
+         "BroadcastHashJoin" in p and "ArrowEvalPython" not in p
+         and "CartesianProduct" not in p)
+    )
+
     # 4ag. host_centrality_hyperball: every radius step reads the
     # PERSISTED register/edge relations (InMemoryTableScan — the
     # corpus parquet is scanned once, not once per radius), merges are

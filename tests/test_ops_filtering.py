@@ -138,3 +138,26 @@ def test_robots_filter_disallow_prefix_semantics(spark):
             saw_open_host = True
     assert saw_block and saw_open_host
 
+
+def test_gopher_and_c4_semantics(spark):
+    g = {r.doc_id: r for r in
+         __import__("pdf_parser_spark.ops.heuristics", fromlist=["x"])
+         .gopher_quality_filter(spark, SF_DIR).collect()}
+    assert g
+    for r in g.values():
+        # flags must agree with the emitted statistics
+        from pdf_parser_spark.ops import heuristics as H
+        expect = (H.G_MIN_WORDS <= r.n_words <= H.G_MAX_WORDS
+                  and H.G_MIN_MWL_E2 <= r.mean_word_len_e2 <= H.G_MAX_MWL_E2
+                  and r.symbol_e4 < H.G_MAX_SYMBOL_E4
+                  and r.bullet_e4 < H.G_MAX_BULLET_E4
+                  and r.ellipsis_e4 < H.G_MAX_ELLIPSIS_E4
+                  and r.alpha_e4 > H.G_MIN_ALPHA_E4
+                  and r.n_stop >= H.G_MIN_STOPWORDS)
+        assert r.passes == expect, r
+    from pdf_parser_spark.ops.heuristics import c4_line_filter
+    c = c4_line_filter(spark, SF_DIR).collect()
+    assert c
+    for r in c:
+        assert 0 <= r.n_kept <= r.n_lines
+        assert r.doc_kept == (r.n_kept >= 2)
