@@ -26,7 +26,9 @@ over it —
   8. funnel lineage             (per-stage row counts + per-source
                                  composition, written next to the data)
 
-and writes a training-ready parquet table bucketed-ready on url.
+and writes the curated rows as plain parquet (no bucketing, no
+repartition by url) to ``{output}/data``, with the funnel counts and
+per-doc_type composition as JSON in ``{output}/funnel.json``.
 
 Execution: every per-document signal the later stages need is
 computed once, by one Arrow UDF over the template-stripped text

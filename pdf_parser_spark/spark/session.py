@@ -5,6 +5,16 @@ small Arrow batches (documents are the parallel unit; a 10k-row
 default batch of multi-MB PDFs would OOM the worker), AQE on for
 runtime coalescing, and shuffle partitions sized for the local
 testbed (cluster deployments override via spark-submit --conf).
+
+Python workers fork from :mod:`pdf_parser_spark.spark.daemon` rather
+than ``pyspark.daemon``.  Every task otherwise re-reads the central
+directory of pyspark.zip and the py4j zip once per cached zip importer
+(CPython 3.11's ``importlib.invalidate_caches``), a fixed 100-220 ms of
+CPU per UDF task whatever the UDF does; that daemon re-reads an archive
+only when it changed.  The module sits in this package, which the
+daemon imports through ``spark.executorEnv.PYTHONPATH`` locally; on a
+cluster the package must be on the executors' PYTHONPATH when the
+daemon starts, as YARN arranges for ``--py-files dist/engine.zip``.
 """
 
 from __future__ import annotations
@@ -42,6 +52,7 @@ def build_session(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
+        .config("spark.python.daemon.module", "pdf_parser_spark.spark.daemon")
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -25,7 +25,19 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+
+def _write_counted(df: DataFrame, snap_dir: str) -> int:
+    """Write ``df`` as parquet into ``snap_dir`` and return its row
+    count, observed on the write itself rather than by re-reading the
+    snapshot.  The observation sits at the root of the written plan, so
+    it reports 0 for an empty frame too."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(snap_dir)
+    return obs.get["rows"]
 
 
 class SnapshotParquetTable:
@@ -72,13 +84,12 @@ class SnapshotParquetTable:
         manifest = self._read_manifest()
         snap_id = self._next_id(manifest)
         snap_dir = os.path.join(self.path, f"snap-{snap_id:04d}")
-        df.write.mode("overwrite").parquet(snap_dir)
-        written = self.spark.read.parquet(snap_dir)
+        row_count = _write_counted(df, snap_dir)
         record = {
             "id": snap_id,
             "dir": f"snap-{snap_id:04d}",
             "committed_at": time.time(),
-            "row_count": written.count(),
+            "row_count": row_count,
             "lineage": lineage_rows or [],
         }
         manifest["snapshots"].append(record)
@@ -117,13 +128,12 @@ class SnapshotParquetTable:
         n_files = min(max(1, -(-total // target_bytes)), 4096)
         snap_id = self._next_id(manifest)
         snap_dir = os.path.join(self.path, f"snap-{snap_id:04d}")
-        df = self.read()
-        df.repartition(n_files).write.mode("overwrite").parquet(snap_dir)
+        row_count = _write_counted(self.read().repartition(n_files), snap_dir)
         record = {
             "id": snap_id,
             "dir": f"snap-{snap_id:04d}",
             "committed_at": time.time(),
-            "row_count": self.spark.read.parquet(snap_dir).count(),
+            "row_count": row_count,
             "lineage": [r for s in snaps for r in s.get("lineage", [])],
             "compacted_from": [s["id"] for s in snaps],
         }

@@ -253,3 +253,25 @@ spark.stop()
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "SAME True" in proc.stdout, proc.stdout
+
+
+def test_udf_workers_fork_from_the_zip_caching_daemon(spark):
+    """Python workers of a ``build_session`` session fork from
+    ``pdf_parser_spark.spark.daemon``, so a UDF task does not re-read
+    the pyspark zips' directories (tests/test_worker_daemon.py)."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("string")
+    def invalidator(s: pd.Series) -> pd.Series:
+        import zipimport
+
+        return s.map(lambda _: zipimport.zipimporter.invalidate_caches.__module__)
+
+    got = {
+        r[0]
+        for r in spark.range(0, 8, numPartitions=4)
+        .select(invalidator(F.col("id").cast("string")))
+        .collect()
+    }
+    assert got == {"pdf_parser_spark.spark.daemon"}
