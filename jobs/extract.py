@@ -70,6 +70,18 @@ def main() -> None:
                     help="checkpoint dir for --stream (default: "
                          "<output>/_checkpoint)")
     args = ap.parse_args()
+    if args.stream:
+        # the stream path runs the default extraction per micro-batch
+        # and writes its own batch dirs: these flags would be dropped
+        unsupported = [flag for flag, given in (
+            ("--page", args.page is not None),
+            ("--filters extended", args.filters == "extended"),
+            ("--resume", args.resume),
+            ("--compact", args.compact),
+            ("--wet-output", args.wet_output is not None),
+        ) if given]
+        if unsupported:
+            ap.error(f"--stream does not support {', '.join(unsupported)}")
 
     from pdf_parser_spark.spark.job import lineage, resume_filter, run_extract
     from pdf_parser_spark.spark.session import build_session

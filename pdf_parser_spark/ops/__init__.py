@@ -2,10 +2,11 @@
 
 Corpus-level operators around the extraction pipeline (SURVEY.md §2):
 deduplication, text analysis, link analysis, splits, url admission
-and the filtering and heuristics (Gopher/C4/CCNet) families.
-Each operator is a Spark-first DataFrame plan (built-in functions
-and, where a row needs Python, a vectorized Arrow UDF) with a DuckDB
-oracle-SQL twin for the value-exact correctness gate.
+and host-template stripping: only what the jobs and streaming
+queries import.  Each operator is a Spark-first DataFrame plan
+(built-in functions and, where a row needs Python, a vectorized Arrow
+UDF) with a DuckDB oracle-SQL twin for the value-exact correctness
+gate.
 
 Registry contract: every module exposes ``QUERIES: dict[name ->
 (callable(spark, sf_dir) -> DataFrame, oracle_sql | None)]``.
@@ -26,17 +27,9 @@ PRODUCT_MODULES = (
     "urlquality",
 )
 
-# Modules only the registry uses.  The driver's correctness pass reads
-# at most 50 ``__spark_entry__.queries()`` entries, so the registry
-# holds no more than that (tests/test_ops_parity.py::test_entry_smoke).
-REGISTRY_MODULES = (
-    "filtering",
-    "heuristics",
-)
-
 
 def all_queries():
     out = {}
-    for name in PRODUCT_MODULES + REGISTRY_MODULES:
+    for name in PRODUCT_MODULES:
         out.update(importlib.import_module(f"{__name__}.{name}").QUERIES)
     return out

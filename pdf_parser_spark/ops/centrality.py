@@ -36,10 +36,9 @@ Scale design (the whole point — this replaces Θ(V²) BFS state):
   edge list and ONE partial-aggregated groupBy-max — the same
   shuffle shape as a PageRank step, rows are (node, bucket, rho)
   triples only;
-* registers and edges are persisted per round (the §12 dedup_cluster
-  rule: a relation referenced twice per step — self-merge + neighbor
-  merge — must be materialized or the lineage re-derives the corpus
-  scan per radius);
+* registers and edges are persisted per round: a relation referenced
+  twice per step (self-merge + neighbor merge) must be materialized,
+  or the lineage re-derives the corpus scan per radius;
 * estimates are a (V × M)-row frame per radius, partial-combined to
   one row per node; the final assembly is V-row broadcast-size joins.
 """

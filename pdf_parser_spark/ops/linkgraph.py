@@ -5,8 +5,7 @@ Web-corpus curation weights documents by the authority of their host
 the canonical authority score is PageRank (Page, Brin, Motwani,
 Winograd, "The PageRank Citation Ranking", Stanford InfoLab 1999 —
 public).  The reference engine has no link analysis; this operator
-adds the iterative-graph algorithm class alongside ops/dedup.py's
-pointer-jumping connected components.
+adds the iterative-graph algorithm class.
 
 Why exact integers: float PageRank is not engine-comparable — the
 damped sum accumulates in engine-specific order, so ranks drift by

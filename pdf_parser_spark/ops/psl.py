@@ -137,13 +137,12 @@ def psl_rules_df(spark: SparkSession, rules: list[str] | None = None) -> DataFra
     """Rules as a broadcastable dimension (rule_key, ps_len, is_exc).
 
     JVM-literal build (spark.range + explode of literals) for the
-    snapshot — same rationale as the blocklist in filtering.py: a
-    createDataFrame over a Python list plans a Python-worker scan just
-    to broadcast a few dozen rows.  The FULL list (~9.5k rules,
-    load_psl_file) goes through createDataFrame instead: a 9.5k-struct
-    literal array would bloat the plan tree, while one Arrow-batched
-    local scan feeding a broadcast is exactly how a production job
-    ships a file-sourced dimension."""
+    snapshot: a createDataFrame over a Python list plans a
+    Python-worker scan just to broadcast a few dozen rows.  The FULL
+    list (~9.5k rules, load_psl_file) goes through createDataFrame
+    instead: a 9.5k-struct literal array would bloat the plan tree,
+    while one Arrow-batched local scan feeding a broadcast is exactly
+    how a production job ships a file-sourced dimension."""
     parsed = [_parse_rule(r) for r in (rules or PSL_SNAPSHOT)]
     if len(parsed) > 200:
         # one-time parquet spill so every subsequent run scans the

@@ -96,7 +96,8 @@ def split_decontaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     sig_udf = _make_sig_udf()
     # emptiness guard BEFORE the UDF (a size(sig) post-filter makes
-    # Filter and Project each evaluate the UDF — see dedup._shingled)
+    # Filter and Project each evaluate the UDF — see
+    # dedup.dedup_minhash_lsh)
     sig = (
         dedup_corpus(spark, sf_dir)
         .filter(F.size(tokens(F.col("text"))) >= SHINGLE_N)

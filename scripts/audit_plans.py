@@ -50,56 +50,6 @@ def main() -> None:
     checks.append(("pushdown-warc-ts", "warc_ts" in p.split("DataFilters")[-1][:200]
                    if "DataFilters" in p else False))
 
-    # 4e. the skew-hardened jaccard self-join shuffles on the COMPOSITE
-    # (mh0, band-emission) key, not mh0 alone
-    from pdf_parser_spark.ops.dedup import dedup_ngram_jaccard
-
-    p = plan_of(dedup_ngram_jaccard(spark, "/root/testdata/sf0.001"))
-    join_seg = p.split("Join")[1][:400] if "Join" in p else ""
-    checks.append(
-        ("jaccard-composite-join-key", "mh0" in join_seg and "k#" in join_seg)
-    )
-
-    # 4g. admission-control ops (ops/filtering.py)
-    from pdf_parser_spark.ops.filtering import (
-        doclen_percentiles,
-        incremental_dedup,
-        quality_classifier,
-        url_host_filter,
-    )
-
-    # blocklist suffix semantics rewritten as TWO broadcast equi-joins
-    # (PSL candidate-suffix rules, then the blocklist) — never a
-    # per-rule LIKE scan / nested loop, never a shuffled join
-    p = plan_of(url_host_filter(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("hostfilter-psl-broadcast-equijoins",
-         p.count("BroadcastHashJoin") >= 2
-         and "NestedLoop" not in p and "SortMergeJoin" not in p)
-    )
-
-    # both join sides reduced to (md5, id) before any join; joins are
-    # broadcast at this scale (AQE would pick sides at 100 TB)
-    p = plan_of(incremental_dedup(spark, "/root/testdata/sf0.001"))
-    checks.append(("incdedup-broadcast", "BroadcastHashJoin" in p))
-
-    # pure-codegen linear gate: no exchange, no Python
-    p = plan_of(quality_classifier(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("quality-gate-narrow-codegen",
-         "Exchange" not in p and "ArrowEvalPython" not in p)
-    )
-
-    # percentiles: the corpus-sized operation is ONE combinable
-    # aggregate (partial_count before its exchange); the window sorts
-    # only the distinct-value rows, and no Python anywhere
-    p = plan_of(doclen_percentiles(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("percentiles-partial-agg-then-window",
-         "partial_count" in p and "Window" in p
-         and "ArrowEvalPython" not in p)
-    )
-
     # 4l. substring_dedup: the gram hasher is evaluated exactly once
     # (the duplicated-gram test is a window over the one gram relation,
     # not a self-join that would re-run the UDF per branch), and there
@@ -158,47 +108,6 @@ def main() -> None:
         ("crawlschedule-single-exchange",
          p.count("Exchange hashpartitioning") == 1
          and "ArrowEvalPython" not in p)
-    )
-
-    # 4u. robots_filter: the rules side is BROADCAST with the prefix
-    # test as a residual; the corpus sees one exchange (the verdict
-    # aggregate), never a sort-merge join
-    from pdf_parser_spark.ops.filtering import robots_filter
-
-    p = plan_of(robots_filter(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("robots-broadcast-rules",
-         "BroadcastHashJoin" in p and "SortMergeJoin" not in p
-         and "ArrowEvalPython" not in p
-         and p.count("Exchange hashpartitioning") == 1)
-    )
-
-    # 4v. gopher/c4 heuristics: pure per-document array HOFs — zero
-    # exchange, zero Python
-    from pdf_parser_spark.ops.heuristics import (
-        c4_line_filter,
-        gopher_quality_filter,
-    )
-
-    for nm, fn in (("gopher-narrow-codegen", gopher_quality_filter),
-                   ("c4-narrow-codegen", c4_line_filter)):
-        p = plan_of(fn(spark, "/root/testdata/sf0.001"))
-        checks.append(
-            (nm, "Exchange" not in p and "ArrowEvalPython" not in p
-             and "BatchEvalPython" not in p)
-        )
-
-    # 4aa. ccnet_lm_filter: the bucket table broadcasts back onto the
-    # token stream (never a shuffled join of the corpus-sized side);
-    # one small shuffled join remains legitimate: per-doc aggregates
-    # against the 1-row percentile-cut relation
-    from pdf_parser_spark.ops.heuristics import ccnet_lm_filter
-
-    p = plan_of(ccnet_lm_filter(spark, "/root/testdata/sf0.001"))
-    checks.append(
-        ("ccnet-broadcast-buckets",
-         "BroadcastHashJoin" in p and "ArrowEvalPython" not in p
-         and "CartesianProduct" not in p)
     )
 
     # 4ag. host_centrality_hyperball: every radius step reads the
