@@ -33,17 +33,32 @@ per-doc_type composition as JSON in ``{output}/funnel.json``.
 Execution: every per-document signal the later stages need is
 computed once, by one Arrow UDF over the template-stripped text
 (:func:`add_features`), in the scan's partitions before any shuffle.
-It returns one struct column ``_f``: the token count, the
-quality-floor verdict, the negated integer quality score, the MinHash
-signature and the 8-gram hashes.  ``curate()`` materializes that frame
-with an eager ``localCheckpoint``.  The quality floor is then a filter
-on ``_f.keep``, exact dedup a window over the md5 of the text, the
-band collapse a window over band keys cut from ``_f.sig`` plus one
-anti join, and the span strip a window over the hashes in ``_f.grams``
-whose hit positions a second Arrow UDF turns back into text.  A second
-``localCheckpoint`` materializes the curated frame.  Each stage's
-survivor count is an ``observe()`` metric of one of those two
-executions, so audit and data cannot drift.
+It tokenises each document once and returns one struct column
+``_f``: the token count, the quality-floor verdict, the negated
+integer quality score, the MinHash signature and the 8-gram hashes,
+both cut from the same tokens.  Beside it sits a row id ``_id``.
+``curate()`` materializes that frame with an eager
+``localCheckpoint``, which makes ``_id`` stable.  The second
+execution then decides every drop on relations that carry no text:
+the quality floor is a filter on ``_f.keep``; exact dedup a min-url
+window over ``(url, md5)`` pairs; the band collapse a window over
+band keys cut from ``_f.sig``; and the span strip a window over
+``(_id, pos, gram)`` rows, whose hit positions are collected per
+``_id``.  The losers leave the full rows through anti joins on url,
+the hit positions join back on ``_id``, and a second Arrow UDF
+rebuilds the text.  AQE broadcasts those relations while they are
+small, so the text never shuffles (a large loser set may get a
+sort-merge join, which does shuffle the rows).  The band keys are cut
+from the quality survivors, so the md5 and band windows run side by
+side.  A second ``localCheckpoint`` materializes the curated frame.
+Each stage's survivor count is an ``observe()`` metric of one of
+those two executions, so audit and data cannot drift.  The plans are
+built from SQL text and one-call projections, about 600 JVM round
+trips per pass.
+
+Precondition: the input holds each url once, as the extract table
+does.  The dedup stages drop losers by url, and the span strip counts
+one row as one document.
 
 Run:  spark-submit --py-files dist/engine.zip jobs/curate.py \
           --input /path/extracted --output /path/curated
@@ -61,7 +76,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pandas as pd  # noqa: E402
-from pyspark.sql import DataFrame, Observation, Window, functions as F  # noqa: E402
+from pyspark.sql import DataFrame, Observation, functions as F  # noqa: E402
 from pyspark.sql.pandas.functions import pandas_udf  # noqa: E402
 from pyspark.sql.types import (  # noqa: E402
     ArrayType,
@@ -73,8 +88,9 @@ from pyspark.sql.types import (  # noqa: E402
     StructType,
 )
 
-from pdf_parser_spark.ops.dedup import lsh_bands, minhash_signature  # noqa: E402
-from pdf_parser_spark.ops.substring import GRAM_N, _gram_hashes, dup_gram_hits  # noqa: E402
+from pdf_parser_spark.ops.common import h32_grams, utf8_tokens  # noqa: E402
+from pdf_parser_spark.ops.dedup import SHINGLE_N, lsh_bands, minhash_of  # noqa: E402
+from pdf_parser_spark.ops.substring import GRAM_N, dup_gram_hits  # noqa: E402
 from pdf_parser_spark.ops.textstats import STOPWORDS  # noqa: E402
 
 MIN_TOKENS = 5  # quality floor: at least this many tokens, and 2 * alpha >= tokens
@@ -106,9 +122,9 @@ def url_admission(df: DataFrame, url_col: str = "url") -> DataFrame:
     input scan, zero shuffle, which is why it runs before everything
     else — RefinedWeb-style URL filtering ahead of any content
     stage."""
-    from pdf_parser_spark.ops.urlquality import spam_feature_cols
+    from pdf_parser_spark.ops.urlquality import spam_feature_sql
 
-    return df.filter(spam_feature_cols(F.col(url_col))["admitted"])
+    return df.where(spam_feature_sql(url_col)["admitted"])
 
 
 def strip_host_templates(
@@ -138,61 +154,46 @@ def strip_host_templates(
         group_lcp,
     )
 
-    host = F.regexp_extract(
-        F.col(url_col), "^[A-Za-z][A-Za-z0-9+.-]*://([^/]+)", 1
-    )
-    pre = df.select(
-        host.alias("_h"),
-        F.substring(F.coalesce(F.col(text_col), F.lit("")), 1, PREFIX_CAP)
-        .alias("_p"),
-    )
-    ext = pre.groupBy("_h").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.min("_p").alias("_a"),
-        F.max("_p").alias("_b"),
-    )
+    host = f"regexp_extract({url_col}, '^[A-Za-z][A-Za-z0-9+.-]*://([^/]+)', 1)"
     tmpl = (
-        ext.withColumn("_tlen", group_lcp(F.col("_a"), F.col("_b")))
-        .filter(
-            (F.col("_n") >= MIN_DOCS)
-            & (F.col("_tlen") >= TEMPLATE_MIN_LEN)
-            # a FULL-cap LCP means the host's docs are identical as
-            # far as we looked: the host mirrors one page, which exact
-            # dedup removes; it is not a banner.  The banner evidence
-            # is a prefix that visibly ENDS inside the cap
-            & (F.col("_tlen") < PREFIX_CAP)
+        df.selectExpr(
+            f"{host} AS _h",
+            f"substring(coalesce({text_col}, ''), 1, {PREFIX_CAP}) AS _p",
         )
-        .select(
-            "_h",
-            F.col("_a").substr(F.lit(1), F.col("_tlen").cast("int"))
-            .alias("_tmpl"),
-            "_tlen",
-        )
+        .groupBy("_h")
+        .agg(F.expr("count(1) AS _n"), F.expr("min(_p) AS _a"),
+             F.expr("max(_p) AS _b"))
+        .selectExpr("_h", "_n", "_a", f"{group_lcp('_a', '_b')} AS _tlen")
+        # a FULL-cap LCP means the host's docs are identical as far as
+        # we looked: the host mirrors one page, which exact dedup
+        # removes; it is not a banner.  The banner evidence is a
+        # prefix that visibly ENDS inside the cap
+        .where(f"_n >= {MIN_DOCS} AND _tlen >= {TEMPLATE_MIN_LEN}"
+               f" AND _tlen < {PREFIX_CAP}")
+        .selectExpr("_h", "substr(_a, 1, CAST(_tlen AS INT)) AS _tmpl", "_tlen")
     )
-    joined = df.withColumn("_h", host).join(F.broadcast(tmpl), "_h", "left")
-    has_tmpl = F.col("_tmpl").isNotNull() & F.col(text_col).startswith(
-        F.col("_tmpl")
+    has_tmpl = f"_tmpl IS NOT NULL AND startswith({text_col}, _tmpl)"
+    stripped = (
+        f"CASE WHEN {has_tmpl} THEN substr({text_col}, CAST(_tlen + 1 AS INT),"
+        f" length({text_col})) ELSE {text_col} END AS {text_col}"
     )
     return (
-        joined.withColumn(
-            "_template_removed",
-            F.when(has_tmpl, F.col("_tlen")).otherwise(F.lit(0)).cast("long"),
+        df.selectExpr("*", f"{host} AS _h")
+        .join(F.broadcast(tmpl), "_h", "left")
+        .selectExpr(
+            *(stripped if c == text_col else f"`{c}`" for c in df.columns),
+            f"CAST(CASE WHEN {has_tmpl} THEN _tlen ELSE 0 END AS BIGINT)"
+            " AS _template_removed",
         )
-        .withColumn(
-            text_col,
-            F.when(
-                has_tmpl,
-                F.col(text_col).substr(
-                    (F.col("_tlen") + 1).cast("int"), F.length(text_col)
-                ),
-            ).otherwise(F.col(text_col)),
-        )
-        .drop("_h", "_tmpl", "_tlen")
     )
 
 
-def _make_feature_udf():
-    """The per-document feature UDF: text → ``FEATURES`` struct.
+_STOP = frozenset(w.encode() for w in STOPWORDS)
+_ALPHA = re.compile(rb"[A-Za-z]").search
+
+
+def doc_features(text: str | None) -> tuple:
+    """One document's ``FEATURES`` row, from one tokenisation.
 
     Each field equals the Spark definition it replaces: ``n_tok`` is
     ``size(ops.common.tokens(text))``; ``keep`` is the quality floor
@@ -200,30 +201,35 @@ def _make_feature_udf():
     token is alpha when it holds an ASCII letter); ``nq`` is minus
     ops.textstats.quality_features' score scaled by 10^4 and rounded
     half up, summed in the same order; ``sig`` and ``grams`` are the
-    ops.dedup MinHash signature and the ops.substring 8-gram hashes.
-    A null text gives a null ``n_tok`` and ``nq``, as ``size(null)``
-    does; an empty one a null ``nq``."""
-    stop = frozenset(STOPWORDS)
-    alpha = re.compile("[A-Za-z]").search
+    ops.dedup MinHash signature and the ops.substring 8-gram hashes,
+    both cut by one ``ops.common.h32_grams`` call from the same
+    tokens.  The tokens are the UTF-8 bytes of the whitespace split:
+    the letter test, the stopword test and the distinct count read the
+    same on bytes as on text.  A null text gives a null ``n_tok`` and
+    ``nq``, as ``size(null)`` does; an empty one a null ``nq``."""
+    if text is None:
+        return (None, False, None, [], [])
+    b, toks = utf8_tokens(text)
+    n = len(toks)
+    nq = None
+    if n:
+        score = (0.4 * (len(list(filter(_STOP.__contains__, toks))) / n)
+                 + 0.3 * (len(set(toks)) / n)
+                 + 0.3 * min(n / 50.0, 1.0))
+        nq = -math.floor(score * 10000.0 + 0.5)
+    n_alpha = len(list(filter(_ALPHA, toks)))
+    shingles, grams = h32_grams(b, toks, SHINGLE_N, GRAM_N)
+    return (n, n >= MIN_TOKENS and 2 * n_alpha >= n, nq,
+            minhash_of(shingles), grams.tolist())
+
+
+def _make_feature_udf():
+    """The per-document feature UDF: text → ``FEATURES`` struct, one
+    :func:`doc_features` row per document."""
 
     @pandas_udf(FEATURES)
     def features(text: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in text:
-            if t is None:
-                rows.append((None, False, None, [], []))
-                continue
-            toks = [w for w in t.split(" ") if w]
-            n = len(toks)
-            n_alpha = sum(1 for w in toks if alpha(w))
-            nq = None
-            if n:
-                score = (0.4 * (sum(1 for w in toks if w in stop) / n)
-                         + 0.3 * (len(set(toks)) / n)
-                         + 0.3 * min(n / 50.0, 1.0))
-                nq = -math.floor(score * 10000.0 + 0.5)
-            rows.append((n, n >= MIN_TOKENS and 2 * n_alpha >= n, nq,
-                         minhash_signature(t), _gram_hashes(t)))
+        rows = [doc_features(t) for t in text]
         return pd.DataFrame(rows, columns=FEATURES.names, dtype=object)
 
     return features
@@ -255,31 +261,39 @@ def _make_rebuild_udf():
 
 
 def add_features(df: DataFrame, text_col: str = "text_extracted") -> DataFrame:
-    """Attach the ``_f`` feature struct (see :func:`_make_feature_udf`)
-    that stages 4-7 read; a narrow projection, one UDF call per row."""
-    return df.withColumn("_f", _make_feature_udf()(F.col(text_col)))
+    """Attach the ``_f`` feature struct (see :func:`doc_features`)
+    that stages 4-7 read, and a row id ``_id`` that
+    :func:`strip_repeated_spans` keys the gram relation by; a narrow
+    projection, one UDF call per row.  ``_id`` is stable once the
+    frame is checkpointed, as ``curate()`` does."""
+    return df.select(
+        "*",
+        F.monotonically_increasing_id().alias("_id"),
+        _make_feature_udf()(F.col(text_col)).alias("_f"),
+    )
 
 
 def quality_floor(df: DataFrame) -> DataFrame:
     """Stage 4: keep the rows whose ``_f.keep`` verdict passes the
     floor: at least MIN_TOKENS tokens, at least half of them carrying
     an ASCII letter (an integer gate, ``2 * n_alpha >= n_tok``)."""
-    return df.filter(F.col("_f.keep"))
+    return df.where("_f.keep")
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text_extracted") -> DataFrame:
-    """Stage 5: one md5 shuffle; the keeper is the min url per digest
-    (deterministic, resume-stable)."""
-    by_md5 = Window.partitionBy("_md5")
-    return (
-        df.withColumn("_md5", F.md5(F.col(text_col).cast("binary")))
-        .withColumn("_keep_url", F.min("url").over(by_md5))
-        .filter(F.col("url") == F.col("_keep_url"))
-        .drop("_md5", "_keep_url")
+    """Stage 5: the keeper is the min url per md5 of the text
+    (deterministic, resume-stable).  The md5 window runs over a
+    ``(url, _md5)`` projection, so only urls and digests shuffle; the
+    losers leave the full rows through one anti join on url."""
+    losers = (
+        df.selectExpr("url", f"md5(CAST({text_col} AS BINARY)) AS _md5")
+        .selectExpr("url", "min(url) OVER (PARTITION BY _md5) AS _ku")
+        .where("url != _ku")
     )
+    return df.join(losers, "url", "left_anti")
 
 
-def neardup_collapse(df: DataFrame) -> DataFrame:
+def neardup_collapse(df: DataFrame, pool: DataFrame | None = None) -> DataFrame:
     """Stage 6: banded MinHash-LSH collapse, keep the BEST-quality
     member per bucket (FineWeb-style keep-best: the highest quality
     score wins, ties break to the min url).
@@ -290,70 +304,81 @@ def neardup_collapse(df: DataFrame) -> DataFrame:
     survives only if it wins its bucket in EVERY band) removes one
     side of every detected pair deterministically: every url that
     loses some band is dropped by one anti join.  Docs too short to
-    shingle (empty signature) pass through untouched."""
-    sig = df.filter(F.size("_f.sig") > 0).select(
-        "url", F.col("_f.nq").alias("_nq"), F.col("_f.sig").alias("sig")
+    shingle (empty signature) pass through untouched.
+
+    The band keys are cut from ``pool`` (default ``df``).  ``curate()``
+    passes the frame before exact dedup, so the band window need not
+    wait for the md5 window.  That drops the same rows: an exact-dup
+    loser has its keeper's signature, quality score and buckets, and
+    a larger url, so any doc it beats in a bucket loses to the keeper
+    there too."""
+    sig = (df if pool is None else pool).where("size(_f.sig) > 0").selectExpr(
+        "url", "_f.nq AS _nq", "_f.sig AS sig"
     )
     # arg-max quality = min of (-q, url) over the band bucket
-    bucket = Window.partitionBy("band", "band_key")
     losers = (
         lsh_bands(sig)
-        .withColumn("_ku", F.min_by("url", F.struct("_nq", "url")).over(bucket))
-        .filter(F.col("url") != F.col("_ku"))
-        .select("url")
+        .selectExpr(
+            "url",
+            "min_by(url, struct(_nq, url)) OVER (PARTITION BY band, band_key) AS _ku",
+        )
+        .where("url != _ku")
     )
     return df.join(losers, "url", "left_anti")
 
 
 def strip_repeated_spans(
-    df: DataFrame, text_col: str = "text_extracted", id_col: str = "url"
+    df: DataFrame, text_col: str = "text_extracted", id_col: str = "_id"
 ) -> DataFrame:
     """Stage 7: blank cross-document repeated spans (Lee et al.
     ACL'22 exact-substring dedup at the n-gram anchor —
     ops/substring.py documents the exactness argument) from EVERY
     carrier row.  Rows are transformed, never dropped; ``_n_tok`` is
     the kept token count and ``_tok_removed`` the per-row strip count
-    for lineage.  Drops ``_f``.
+    for lineage.  Drops ``_f`` and ``_id``.
 
-    The gram hashes come from ``_f``; only (gram, id, pos) triples
+    The gram hashes come from ``_f``; only (gram, row id, pos) triples
     shuffle, through one dup-gram window over the gram hash.  Each
-    document's hit positions are collected and joined back, and the
-    rebuild UDF keeps the tokens no hit covers."""
-    grams = df.select(id_col, F.posexplode("_f.grams").alias("pos", "g"))
+    document's hit positions are collected and joined back on the row
+    id, and the rebuild UDF keeps the tokens no hit covers.  A row id
+    stands for one document because curate's input holds each url
+    once."""
     hits = (
-        dup_gram_hits(grams, id_col)
+        dup_gram_hits(
+            df.selectExpr(id_col, "posexplode(_f.grams) AS (pos, g)"), id_col
+        )
         .groupBy(id_col)
-        .agg(F.collect_list("pos").alias("_hp"))
+        .agg(F.expr("collect_list(pos) AS _hp"))
     )
     rebuilt = _make_rebuild_udf()(F.col(text_col), F.col("_hp"))
+    cols = [f"_r.text AS {text_col}" if c == text_col else f"`{c}`"
+            for c in df.columns if c not in ("_f", id_col)]
     return (
         df.join(hits, id_col, "left")
-        .withColumn("_r", rebuilt)
-        .withColumns({
-            text_col: F.col("_r.text"),
-            "_n_tok": F.col("_r.n_tok"),
-            "_tok_removed": F.col("_r.removed"),
-        })
-        .drop("_f", "_hp", "_r")
+        .select("*", rebuilt.alias("_r"))
+        .selectExpr(*cols, "_r.n_tok AS _n_tok", "_r.removed AS _tok_removed")
     )
 
 
 def curate(extracted: DataFrame) -> tuple[DataFrame, list[dict]]:
     """Run the funnel; returns (curated DF, per-stage lineage rows).
 
-    The stages compose into lazy plans that run in two executions,
-    each an eager ``localCheckpoint``: admission through the feature
-    pass, then the quality floor through the span strip; the caller
-    writes the second, checkpointed frame.  Each stage's row count is
-    an ``observe()`` metric of its execution.  Both run with AQE's
-    empty-relation rule off, so that an emptied stage still reports
-    its count."""
+    ``extracted`` holds each url once (the extract table's contract):
+    the dedup stages decide drops per url, and the span strip treats
+    one row as one document.  The stages compose into lazy plans that
+    run in two executions, each an eager ``localCheckpoint``:
+    admission through the feature pass, then the quality floor
+    through the span strip; the caller writes the second, checkpointed
+    frame.  Each stage's row count is an ``observe()`` metric of its
+    execution.  Both run with AQE's empty-relation rule off, so that
+    an emptied stage still reports its count."""
     observed: list[tuple[str, Observation]] = []
+    rows = F.expr("count(1) AS rows")
 
     def stage(name: str, frame: DataFrame) -> DataFrame:
         obs = Observation(name)
         observed.append((name, obs))
-        return frame.observe(obs, F.count(F.lit(1)).alias("rows"))
+        return frame.observe(obs, rows)
 
     conf = extracted.sparkSession.conf
     prior = conf.get(EXCLUDED_RULES, None)
@@ -364,12 +389,12 @@ def curate(extracted: DataFrame) -> tuple[DataFrame, list[dict]]:
         # (a scan-local projection over the url column, zero shuffle),
         # so structurally-spammy pages never reach the content stages.
         sA = stage("url_admitted", url_admission(s0))
-        s1 = stage("decoded", sA.filter(F.col("decode_error").isNull()))
+        s1 = stage("decoded", sA.where("decode_error IS NULL"))
         s1b = stage("template_strip", strip_host_templates(s1))
         feats = add_features(s1b).localCheckpoint(eager=True)
         s2 = stage("quality", quality_floor(feats))
         s3 = stage("exact_dedup", exact_dedup(s2))
-        s4 = stage("near_dedup", neardup_collapse(s3))
+        s4 = stage("near_dedup", neardup_collapse(s3, pool=s2))
         s5 = stage("span_dedup", strip_repeated_spans(s4))
         curated = s5.localCheckpoint(eager=True)
     finally:

@@ -82,6 +82,13 @@ def main() -> None:
         ) if given]
         if unsupported:
             ap.error(f"--stream does not support {', '.join(unsupported)}")
+        # the stream reads a parquet landing dir; a table or archive
+        # input would fail only after the session is built
+        for scheme in ("iceberg:", "warc:"):
+            if args.input.startswith(scheme):
+                ap.error(f"--stream reads a parquet landing dir, not {scheme} input")
+    elif args.checkpoint is not None:
+        ap.error("--checkpoint is only used with --stream")
 
     from pdf_parser_spark.spark.job import lineage, resume_filter, run_extract
     from pdf_parser_spark.spark.session import build_session

@@ -14,22 +14,20 @@ here comes in two byte-equivalent spellings:
 
 The Column spellings run JVM-side inside WholeStageCodegen.  The
 Arrow UDFs that hash word grams (MinHash shingles, span-dedup
-8-grams) use the Python twins ``h32_utf8`` and ``word_grams_utf8``.
+8-grams) use the Python twins ``utf8_tokens`` and ``h32_grams``.
 """
 
 from __future__ import annotations
 
-import struct
 from itertools import accumulate
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 try:  # CPython's built-in md5 runs ~3x faster than OpenSSL's on short grams
     from _md5 import md5 as _md5
 except ImportError:  # an interpreter built without it
     from hashlib import md5 as _md5
-
-_U32 = struct.Struct(">I").unpack_from
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -41,12 +39,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def h32(col: Column) -> Column:
     """Deterministic 32-bit hash of a string column as BIGINT."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
-def h32_utf8(b: bytes) -> int:
-    """Python twin of :func:`h32` over UTF-8 bytes, for the Arrow UDFs
-    that hash grams."""
-    return _U32(_md5(b).digest())[0]
 
 
 def h32_sql(expr: str) -> str:
@@ -117,20 +109,34 @@ def shingles(tok: Column, n: int) -> Column:
     return F.array_distinct(gram)
 
 
-def word_grams_utf8(text: str, n: int) -> list[bytes]:
-    """Python twin of the position-ordered n-grams behind
-    :func:`shingles`: the UTF-8 bytes of the :func:`tokens` at
-    positions i..i+n-1 joined with one space, for every i.
+def utf8_tokens(text: str | None) -> tuple[bytes, list[bytes]]:
+    """The UTF-8 bytes of ``text`` and its :func:`tokens`, split from
+    those bytes (no UTF-8 sequence holds a 0x20 byte, so splitting the
+    encoded text is splitting the text).  ``None`` reads as empty."""
+    b = (text or "").encode("utf-8")
+    return b, [t for t in b.split(b" ") if t]
 
-    Splitting the encoded text is splitting the text (no UTF-8
-    sequence holds a 0x20 byte), and a single-spaced text already holds
-    every gram as one slice, so no gram is re-joined or re-encoded."""
-    b = text.encode("utf-8")
-    toks = [t for t in b.split(b" ") if t]
-    starts = list(accumulate((len(t) + 1 for t in toks), initial=0))
+
+def h32_grams(b: bytes, toks: list[bytes], *ns: int) -> list[np.ndarray]:
+    """Python twin of :func:`h32` over the word n-grams behind
+    :func:`shingles`: for each n in ``ns``, an int64 array holding the
+    h32 of the tokens at positions i..i+n-1 joined with one space, for
+    every i in position order (empty when ``toks`` has fewer than n).
+
+    ``b`` and ``toks`` come from :func:`utf8_tokens`.  A single-spaced
+    text already holds every gram as one slice, so no gram is re-joined
+    or re-encoded; each n's grams are hashed into one buffer of md5
+    digests whose first four bytes are read big-endian."""
+    starts = list(accumulate([len(t) + 1 for t in toks], initial=0))
     if len(b) != starts[-1] - 1:  # spaces doubled, leading or trailing
         b = b" ".join(toks)
-    return [b[starts[i] : starts[i + n] - 1] for i in range(len(toks) - n + 1)]
+    ends = [s - 1 for s in starts]
+    out = []
+    for n in ns:
+        grams = map(b.__getitem__, map(slice, starts, ends[n:]))
+        digests = b"".join([m.digest() for m in map(_md5, grams)])
+        out.append(np.frombuffer(digests, ">u4")[::4].astype(np.int64))
+    return out
 
 
 def shingles_sql(tok_expr: str, n: int) -> str:

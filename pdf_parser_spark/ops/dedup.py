@@ -26,13 +26,13 @@ from pdf_parser_spark.ops.common import (
     DEDUP_CORPUS_SQL,
     roundn,
     dedup_corpus,
+    h32_grams,
     h32_sql,
-    h32_utf8,
     load_table,
     shingles_sql,
     tokens,
     tokens_sql,
-    word_grams_utf8,
+    utf8_tokens,
 )
 
 MINHASH_K = 16          # signature length
@@ -102,32 +102,26 @@ def _perm_sql(h_expr: str, i_expr: str) -> str:
 # escape hatch, justified by measurement.
 
 
-def _shingle_hash_set(text: str) -> list[int]:
-    """Distinct word-3-gram h32 values, sorted (deterministic).
-
-    The distinct is applied to the HASH values, not the gram strings:
-    two distinct grams colliding on the 32-bit prefix collapse to one
-    value, so the signature's min over the set is the oracle's min
-    over its ``h32`` values even on a within-document collision."""
-    if not text:  # None / empty cell must not kill the task
-        return []
-    return sorted({h32_utf8(g) for g in set(word_grams_utf8(text, SHINGLE_N))})
-
-
 _PERM_A = 2 * np.arange(MINHASH_K, dtype=np.int64) + 1
 _PERM_B = 12345 * np.arange(MINHASH_K, dtype=np.int64)
 
 
-def minhash_signature(text: str | None) -> list[int]:
-    """The MINHASH_K-long MinHash signature of ``text``: the min of
-    each :func:`_perm` over its shingle-hash set.  Empty when the text
-    has fewer than SHINGLE_N tokens."""
-    hs = _shingle_hash_set(text)
-    if not hs:
+def minhash_of(shingle_hashes: np.ndarray) -> list[int]:
+    """The MINHASH_K-long MinHash signature over word-3-gram h32
+    values: the min of each :func:`_perm` over all of them.  A min does
+    not change when a value repeats, so this is the oracle's min over
+    its distinct shingles, even when two distinct grams collide on the
+    32-bit prefix.  Empty when there are no shingles."""
+    if not shingle_hashes.size:
         return []
-    h = np.asarray(hs, dtype=np.int64)
-    sig = (h[None, :] * _PERM_A[:, None] + _PERM_B[:, None]) % MINHASH_PRIME
-    return sig.min(axis=1).tolist()
+    h = shingle_hashes[None, :]
+    return ((h * _PERM_A[:, None] + _PERM_B[:, None]) % MINHASH_PRIME).min(axis=1).tolist()
+
+
+def minhash_signature(text: str | None) -> list[int]:
+    """The MinHash signature (:func:`minhash_of`) of ``text``'s word
+    3-grams.  Empty when the text has fewer than SHINGLE_N tokens."""
+    return minhash_of(h32_grams(*utf8_tokens(text), SHINGLE_N)[0])
 
 
 def _make_sig_udf():
@@ -142,28 +136,17 @@ def lsh_bands(sig_df: DataFrame) -> DataFrame:
     """Explode a ``(…, sig)`` frame into one row per LSH band:
     input columns + ``(band, band_key)`` where ``band_key`` is the md5
     of that band's signature slice.  Shared by the near-dup pair join
-    and the decontaminated-split leak check (ops/splits.py)."""
-    cols = sig_df.columns
-    return sig_df.select(
-        *cols,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.md5(
-                        F.array_join(
-                            F.transform(
-                                F.slice("sig", b * LSH_ROWS + 1, LSH_ROWS),
-                                lambda x: x.cast("string"),
-                            ),
-                            ",",
-                        ).cast("binary")
-                    ).alias("band_key"),
-                ),
-            )
-        ).alias("bk"),
-    ).select(*cols, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+    and the decontaminated-split leak check (ops/splits.py).  Written
+    as one SQL generator, so the plan costs one JVM call to build."""
+    band_key = (
+        f"md5(CAST(array_join(transform(slice(sig, b * {LSH_ROWS} + 1, {LSH_ROWS}),"
+        " x -> CAST(x AS STRING)), ',') AS BINARY))"
+    )
+    return sig_df.selectExpr(
+        "*",
+        f"inline(transform(sequence(0, {LSH_BANDS - 1}),"
+        f" b -> named_struct('band', b, 'band_key', {band_key})))",
+    )
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -46,12 +46,12 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from pdf_parser_spark.ops.common import (
+    h32_grams,
     h32_sql,
-    h32_utf8,
     load_table,
     tokens,
     tokens_sql,
-    word_grams_utf8,
+    utf8_tokens,
 )
 
 GRAM_N = 8      # anchor width: spans >= 8 tokens are removed exactly
@@ -64,9 +64,7 @@ VIRAL_QUOTE = (
 def _gram_hashes(text: str) -> list[int]:
     """h32 of each overlapping word-{GRAM_N}-gram, in position order
     (position i covers tokens [i, i+GRAM_N-1], 0-based)."""
-    if not text:  # None / empty cell must not kill the task
-        return []
-    return [h32_utf8(g) for g in word_grams_utf8(text, GRAM_N)]
+    return h32_grams(*utf8_tokens(text), GRAM_N)[0].tolist()
 
 
 def _make_gram_udf():
@@ -97,11 +95,13 @@ def dup_gram_hits(grams: DataFrame, id_col: str) -> DataFrame:
     """(id, pos) rows whose gram ``g`` occurs in >1 distinct document:
     ``min(id) != max(id)`` over a window on ``g`` (the same test as
     ``count(DISTINCT id) > 1``), so ``grams`` is read once."""
-    by_gram = Window.partitionBy("g")
     return (
-        grams.withColumn("_lo", F.min(id_col).over(by_gram))
-        .withColumn("_hi", F.max(id_col).over(by_gram))
-        .filter(F.col("_lo") != F.col("_hi"))
+        grams.selectExpr(
+            "*",
+            f"min({id_col}) OVER (PARTITION BY g) AS _lo",
+            f"max({id_col}) OVER (PARTITION BY g) AS _hi",
+        )
+        .where("_lo != _hi")
         .drop("g", "_lo", "_hi")
     )
 

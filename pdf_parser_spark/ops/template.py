@@ -62,20 +62,16 @@ def _banner_spark() -> F.Column:
 _BANNER_SQL = "'WELCOME TO ' || upper(source) || '.EXAMPLE.COM | HOME ABOUT CONTACT | '"
 
 
-def group_lcp(a: F.Column, b: F.Column) -> F.Column:
-    """LCP length of two strings as a Column — positional
-    first-mismatch over a generated index list (pure built-ins).
-    Combined with min/max aggregation this is the group LCP; also
-    consumed by jobs/curate.py's template-strip stage."""
-    n = F.least(F.length(a), F.length(b))
-    diffs = F.filter(
-        F.sequence(F.lit(1), n),
-        lambda i: a.substr(i, F.lit(1)) != b.substr(i, F.lit(1)),
-    )
+def group_lcp(a: str, b: str) -> str:
+    """LCP length of two string expressions, as Spark SQL text —
+    positional first-mismatch over a generated index list (pure
+    built-ins).  Combined with min/max aggregation this is the group
+    LCP; also consumed by jobs/curate.py's template-strip stage."""
+    n = f"least(length({a}), length({b}))"
+    diffs = f"filter(sequence(1, {n}), i -> substr({a}, i, 1) != substr({b}, i, 1))"
     return (
-        F.when(n > 0, F.coalesce(F.array_min(diffs) - 1, n))
-        .otherwise(F.lit(0))
-        .cast("long")
+        f"CAST(CASE WHEN {n} > 0 THEN coalesce(array_min({diffs}) - 1, {n})"
+        " ELSE 0 END AS BIGINT)"
     )
 
 
@@ -97,7 +93,7 @@ def host_template_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("p").alias("a"),
         F.max("p").alias("b"),
     )
-    out = ext.withColumn("lcp_len", group_lcp(F.col("a"), F.col("b")))
+    out = ext.withColumn("lcp_len", F.expr(group_lcp("a", "b")))
     return out.select(
         "host",
         "n_docs",

@@ -41,7 +41,7 @@ agree bit-for-bit with no float rounding anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from pdf_parser_spark.ops.common import load_table
 
@@ -105,37 +105,36 @@ _URLS_SQL = (
 )
 
 
-def _count_class(url: F.Column, pattern: str) -> F.Column:
+def _count_class(url: str, pattern: str) -> str:
     """Occurrences of a char class = length minus length-after-strip."""
-    return (F.length(url) - F.length(F.regexp_replace(url, pattern, ""))).cast(
-        "long"
-    )
+    return f"CAST(length({url}) - length(regexp_replace({url}, '{pattern}', '')) AS BIGINT)"
 
 
-def spam_feature_cols(url: F.Column) -> dict[str, F.Column]:
-    """The structural feature + score columns over ANY url column —
-    the reusable core consumed both by the oracled op (derived urls)
-    and by jobs/curate.py's admission stage (real crawl urls).  All
-    scan-local codegen; safe to project anywhere."""
-    url_len = F.length(url).cast("long")
+def spam_feature_sql(url: str = "url") -> dict[str, str]:
+    """The structural feature + score columns over ANY url column, as
+    Spark SQL text over the expression ``url`` — the reusable core
+    consumed both by the oracled op (derived urls) and by
+    jobs/curate.py's admission stage (real crawl urls).  All
+    scan-local codegen; safe to project anywhere.  SQL text, not
+    Column builders: the parser builds the whole score in one call
+    instead of one JVM round trip per operator."""
+    url_len = f"CAST(length({url}) AS BIGINT)"
     n_digits = _count_class(url, "[0-9]")
     # integral div, guarded: an empty url must score, not raise
-    digit_ppm = F.when(
-        url_len > 0, F.call_function("div", n_digits * 1_000_000, url_len)
-    ).otherwise(F.lit(0).cast("long"))
+    digit_ppm = f"CASE WHEN {url_len} > 0 THEN ({n_digits} * 1000000) div {url_len} ELSE 0L END"
     n_hyphens = _count_class(url, "-")
     n_params = _count_class(url, "=")
     # segments between slashes after the scheme's ``//``
-    path_depth = (_count_class(url, "/") - F.lit(2)).cast("long")
-    long_run = url.rlike("[0-9]{" + str(LONG_DIGIT_RUN) + ",}")
+    path_depth = f"({_count_class(url, '/')} - 2)"
+    long_run = f"({url} RLIKE '[0-9]{{{LONG_DIGIT_RUN},}}')"
     score = (
-        F.when(digit_ppm > DIGIT_SHARE_PPM, 2).otherwise(0)
-        + F.when(long_run, 2).otherwise(0)
-        + F.when(n_hyphens >= HYPHEN_MIN, 1).otherwise(0)
-        + F.when(n_params >= PARAM_MIN, 1).otherwise(0)
-        + F.when(path_depth >= DEPTH_MIN, 1).otherwise(0)
-        + F.when(url_len >= LEN_MIN, 1).otherwise(0)
-    ).cast("long")
+        f"CAST((CASE WHEN {digit_ppm} > {DIGIT_SHARE_PPM} THEN 2 ELSE 0 END)"
+        f" + (CASE WHEN {long_run} THEN 2 ELSE 0 END)"
+        f" + (CASE WHEN {n_hyphens} >= {HYPHEN_MIN} THEN 1 ELSE 0 END)"
+        f" + (CASE WHEN {n_params} >= {PARAM_MIN} THEN 1 ELSE 0 END)"
+        f" + (CASE WHEN {path_depth} >= {DEPTH_MIN} THEN 1 ELSE 0 END)"
+        f" + (CASE WHEN {url_len} >= {LEN_MIN} THEN 1 ELSE 0 END) AS BIGINT)"
+    )
     return {
         "url_len": url_len,
         "n_digits": n_digits,
@@ -145,7 +144,7 @@ def spam_feature_cols(url: F.Column) -> dict[str, F.Column]:
         "path_depth": path_depth,
         "long_digit_run": long_run,
         "spam_score": score,
-        "admitted": score < ADMIT_BELOW,
+        "admitted": f"({score} < {ADMIT_BELOW})",
     }
 
 
@@ -153,12 +152,10 @@ def url_spam_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, url, url_len, n_digits, digit_ppm, n_hyphens,
     n_params, path_depth, long_digit_run, spam_score, admitted):
     structural URL spam features + integer score, RefinedWeb-style."""
-    urls = _urls(spark, sf_dir)
-    feats = spam_feature_cols(F.col("url"))
-    return urls.select(
+    return _urls(spark, sf_dir).selectExpr(
         "doc_id",
         "url",
-        *[c.alias(name) for name, c in feats.items()],
+        *[f"{sql} AS {name}" for name, sql in spam_feature_sql("url").items()],
     )
 
 

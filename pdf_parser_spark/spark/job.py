@@ -78,10 +78,11 @@ def run_extract(
         n_heavy, F.xxhash64("url")
     )
 
+    # one extraction over the union; Catalyst still pushes the UDF
+    # projection into each branch, so the plan keeps one
+    # ArrowEvalPython per class
     extracted = with_extraction(
-        normal, fmt, page=page, extended=extended_filters
-    ).unionByName(
-        with_extraction(heavy, fmt, page=page, extended=extended_filters)
+        normal.unionByName(heavy), fmt, page=page, extended=extended_filters
     )
     return extracted.select(*OUTPUT_COLUMNS)
 

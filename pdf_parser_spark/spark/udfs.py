@@ -49,6 +49,17 @@ EXTRACT_TYPE = StructType(
 )
 
 SPAN_STRUCT_DDL = "array<struct<start:bigint,end:bigint,kind:string>>"
+# the columns with_extraction adds (replacing any of the same name),
+# as SQL over the UDF's result struct ``_ex``
+EXTRACTION_COLUMNS = {
+    "text_extracted": "_ex.text",
+    "spans": f"CAST(arrays_zip(_ex.s_start, _ex.s_end, _ex.s_kind) AS {SPAN_STRUCT_DDL})",
+    "n_pages": "_ex.n_pages",
+    "n_elements": "_ex.n_elements",
+    "doc_type": "_ex.doc_type",
+    "decode_error": "_ex.error",
+    "decode_error_kind": "_ex.error_kind",
+}
 
 
 def _extract_batch(
@@ -109,24 +120,13 @@ def with_extraction(df, fmt: str = "txt", html_col: str = "html",
     """Append extraction columns to a pages DataFrame.
 
     Narrow map — no shuffle; Catalyst prunes unused input columns
-    around the UDF boundary.
+    around the UDF boundary.  The UDF result lands in a struct ``_ex``
+    and one ``selectExpr`` spreads it into the seven output columns.
     """
     extract = make_extract_udf(fmt, page, extended)
-    return (
-        df.withColumn("_ex", extract(F.col(html_col)))
-        .withColumn("text_extracted", F.col("_ex.text"))
-        .withColumn(
-            "spans",
-            F.arrays_zip("_ex.s_start", "_ex.s_end", "_ex.s_kind").cast(
-                SPAN_STRUCT_DDL
-            ),
-        )
-        .withColumn("n_pages", F.col("_ex.n_pages"))
-        .withColumn("n_elements", F.col("_ex.n_elements"))
-        .withColumn("doc_type", F.col("_ex.doc_type"))
-        .withColumn("decode_error", F.col("_ex.error"))
-        .withColumn("decode_error_kind", F.col("_ex.error_kind"))
-        .drop("_ex")
+    out = [f"{sql} AS {name}" for name, sql in EXTRACTION_COLUMNS.items()]
+    return df.select("*", extract(F.col(html_col)).alias("_ex")).selectExpr(
+        *(f"`{c}`" for c in df.columns if c not in EXTRACTION_COLUMNS), *out
     )
 
 

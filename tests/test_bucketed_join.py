@@ -44,6 +44,9 @@ def spark(tmp_path_factory):
         .getOrCreate()
     )
     yield s
+    # the builder's options also land in JVM system properties, which
+    # the next session in this process would inherit
+    s.sparkContext._jvm.System.clearProperty("spark.sql.autoBroadcastJoinThreshold")
     s.stop()
 
 

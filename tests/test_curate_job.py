@@ -4,8 +4,10 @@ near-dup collapse (keep-BEST-quality member, ties to min url), and
 the funnel lineage report."""
 
 import datetime
+import gc
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -204,14 +206,14 @@ def test_url_admission_scores_empty_url(spark):
     """An empty url scores 0 and is admitted; it must not raise
     DIVIDE_BY_ZERO (ANSI) and fail the job."""
     from jobs.curate import url_admission
-    from pdf_parser_spark.ops.urlquality import spam_feature_cols
+    from pdf_parser_spark.ops.urlquality import spam_feature_sql
 
     df = spark.createDataFrame(
         [("",), ("https://t/p/920357102968457/item/4459817236",)], "url string"
     )
-    feats = spam_feature_cols(F.col("url"))
-    row = df.filter(F.col("url") == "").select(
-        feats["digit_ppm"].alias("ppm"), feats["spam_score"].alias("score")
+    feats = spam_feature_sql("url")
+    row = df.filter(F.col("url") == "").selectExpr(
+        f"{feats['digit_ppm']} AS ppm", f"{feats['spam_score']} AS score"
     ).first()
     assert (row.ppm, row.score) == (0, 0)
     assert [r.url for r in url_admission(df).collect()] == [""]
@@ -404,11 +406,9 @@ def test_feature_udf_matches_spark_definitions(spark):
     assert any(r["sig"] and not r["grams"] for r in got.values())
 
 
-def test_curate_runs_each_python_udf_once_before_any_shuffle(spark, tmp_path):
-    """In curate's executed plans the feature UDF and the rebuild UDF
-    each appear once, and the feature UDF runs in the scan's
-    partitions: no shuffle Exchange below it (the host-template
-    table reaches it through a broadcast)."""
+def _curate_executions(spark, tmp_path) -> list[int]:
+    """Run ``curate()`` over the funnel fixture, read back from parquet,
+    and return the ids of the SQL executions it ran."""
     extracted = run_extract(_pages(spark), fmt="txt", threshold=100_000)
     src = str(tmp_path / "extracted")
     extracted.write.parquet(src)
@@ -421,11 +421,17 @@ def test_curate_runs_each_python_udf_once_before_any_shuffle(spark, tmp_path):
     mark = max(executions(), default=-1)
     curate(spark.read.parquet(src))
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return [eid for eid in executions() if eid > mark]
 
+
+def test_curate_runs_each_python_udf_once_before_any_shuffle(spark, tmp_path):
+    """In curate's executed plans the feature UDF and the rebuild UDF
+    each appear once, and the feature UDF runs in the scan's
+    partitions: no shuffle Exchange below it (the host-template
+    table reaches it through a broadcast)."""
+    sql = spark._jsparkSession.sharedState().statusStore()
     udf_nodes = {"features": [], "rebuild": []}
-    for eid in executions():
-        if eid <= mark:
-            continue
+    for eid in _curate_executions(spark, tmp_path):
         graph = sql.planGraph(eid)
         nodes = {
             n.id(): n
@@ -454,3 +460,112 @@ def test_curate_runs_each_python_udf_once_before_any_shuffle(spark, tmp_path):
                 stack.append(c)
     assert any("Scan" in nodes[c].name() for c in below)
     assert not any(nodes[c].name() == "Exchange" for c in below)
+
+
+def test_curate_shuffles_no_text_after_the_feature_checkpoint(spark, tmp_path):
+    """curate's second execution (quality floor through span strip)
+    decides every drop on relations without text: no shuffle Exchange
+    in its plan outputs ``text_extracted``, and exact dedup's md5
+    exchange carries only the url and the digest.  The full rows meet
+    the loser sets and the hit positions through joins that AQE
+    broadcasts here; at scale, when a loser set is large, AQE may pick
+    a sort-merge join instead, and that shuffles the rows."""
+    sql = spark._jsparkSession.sharedState().statusStore()
+    plans = [sql.execution(eid).get().physicalPlanDescription()
+             for eid in _curate_executions(spark, tmp_path)]
+    second = [p for p in plans if "rebuild(" in p]
+    assert len(second) == 1
+    # the formatted plan lists each operator as "(n) Name", then its
+    # "Input [k]: [...]" and "Arguments: ..." lines
+    exchanges = re.findall(
+        r"^\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]\nArguments: (.*)$",
+        second[0], re.M,
+    )
+    assert exchanges
+    for cols, _ in exchanges:
+        assert "text_extracted#" not in cols, cols
+    md5 = [set(re.sub(r"#\d+L?", "", cols).split(", "))
+           for cols, args in exchanges if args.startswith("hashpartitioning(_md5#")]
+    assert md5 and all(c == {"url", "_md5"} for c in md5)
+
+
+def test_curate_builds_its_plans_in_few_jvm_round_trips(spark, tmp_path, monkeypatch):
+    """Building and running curate's plans on the funnel fixture takes
+    a bounded number of py4j round trips: SQL-text expressions and
+    one-call projections, not one call per Column operator (about
+    2,800 round trips before they were; about 600 with them)."""
+    import py4j.clientserver as cs
+
+    extracted = run_extract(_pages(spark), fmt="txt", threshold=100_000)
+    src = str(tmp_path / "extracted")
+    extracted.write.parquet(src)
+    df = spark.read.parquet(src)
+    calls = [0]
+    send = cs.ClientServerConnection.send_command
+
+    def counted(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    # a cyclic-GC pass would release JVM objects of earlier tests
+    # (one round trip each) inside the counted window
+    gc.collect()
+    gc.disable()
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+    try:
+        _, funnel = curate(df)
+    finally:
+        monkeypatch.undo()
+        gc.enable()
+    assert funnel[-1]["rows"] == 3
+    assert calls[0] <= 1000
+
+
+def test_feature_kernel_matches_the_hash_spec():
+    """The one-pass feature kernel cuts the signature and the 8-gram
+    hashes from one tokenisation; both equal the shared spec
+    (``minhash_signature``, ``_gram_hashes``) and the h32 hex spelling
+    the oracles use: md5 hex prefix of each single-spaced gram, the
+    signature a min over the DISTINCT shingle hashes."""
+    import hashlib
+
+    from jobs.curate import doc_features
+    from pdf_parser_spark.ops.dedup import (
+        MINHASH_K,
+        SHINGLE_N,
+        _perm,
+        minhash_signature,
+    )
+    from pdf_parser_spark.ops.substring import GRAM_N, _gram_hashes
+
+    def h32(gram: str) -> int:
+        return int(hashlib.md5(gram.encode("utf-8")).hexdigest()[:8], 16)
+
+    def grams(toks: list[str], n: int) -> list[str]:
+        return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+    texts = [
+        "",
+        "  ",
+        "one",
+        "one two",                                   # < SHINGLE_N tokens
+        "one two three",
+        "  lead  doubled   spaces trail  ",          # < GRAM_N tokens
+        "a b c d e f g h",                           # exactly GRAM_N
+        "  one two  three four five six seven eight nine  ",
+        "café naïve 東京 straße ñandú ünïcödé ok\tx y\nz end",
+        "東京 大阪 京都 札幌 福岡 神戸 名古屋 横浜 仙台",
+        " ".join(["rep eat"] * 30),                  # shingles repeat
+        _LONG,
+    ]
+    for t in texts:
+        toks = [w for w in t.split(" ") if w]
+        n_tok, _, _, sig, gram_hashes = doc_features(t)
+        assert n_tok == len(toks), t
+        shingle_set = {h32(g) for g in grams(toks, SHINGLE_N)}
+        want_sig = [min(_perm(h, i) for h in shingle_set)
+                    for i in range(MINHASH_K)] if shingle_set else []
+        assert sig == minhash_signature(t) == want_sig, t
+        want_grams = [h32(g) for g in grams(toks, GRAM_N)]
+        assert gram_hashes == _gram_hashes(t) == want_grams, t
+    assert doc_features(None) == (None, False, None, [], [])

@@ -97,7 +97,8 @@ def test_gram_hashes_match_the_hexdigest_spelling():
     """The 8-gram and 3-shingle hashes, sliced from the encoded text,
     equal the join-then-hexdigest spelling on texts whose tokens are
     not single-spaced or not ASCII."""
-    from pdf_parser_spark.ops.dedup import SHINGLE_N, _shingle_hash_set
+    from pdf_parser_spark.ops.common import h32_grams, utf8_tokens
+    from pdf_parser_spark.ops.dedup import SHINGLE_N
     from pdf_parser_spark.ops.substring import _gram_hashes
 
     texts = [
@@ -115,9 +116,8 @@ def test_gram_hashes_match_the_hexdigest_spelling():
         toks = [w for w in (t or "").split(" ") if w]
         grams = [" ".join(toks[i : i + GRAM_N])
                  for i in range(len(toks) - GRAM_N + 1)]
-        shingles = {" ".join(toks[i : i + SHINGLE_N])
-                    for i in range(len(toks) - SHINGLE_N + 1)}
+        shingles = [" ".join(toks[i : i + SHINGLE_N])
+                    for i in range(len(toks) - SHINGLE_N + 1)]
         assert _gram_hashes(t) == [_h32_hexdigest(g) for g in grams], t
-        assert _shingle_hash_set(t) == sorted(
-            {_h32_hexdigest(g) for g in shingles}
-        ), t
+        sh = h32_grams(*utf8_tokens(t), SHINGLE_N)[0].tolist()
+        assert sh == [_h32_hexdigest(g) for g in shingles], t
