@@ -14,7 +14,8 @@ over it —
                                  exact and near-dup signals)
   4. quality floor              (at least MIN_TOKENS tokens, at least
                                  half of them carrying an ASCII letter)
-  5. exact dedup                (md5 window, keep min url)
+  5. exact dedup                (md5 window, keep min url,
+                                 ties to the min row id)
   6. near-dup collapse          (banded MinHash-LSH over h32 shingles,
                                  keep the band-bucket's BEST-quality
                                  member, ties to min url — FineWeb
@@ -39,13 +40,14 @@ integer quality score, the MinHash signature and the 8-gram hashes,
 both cut from the same tokens.  Beside it sits a row id ``_id``.
 ``curate()`` materializes that frame with an eager
 ``localCheckpoint``, which makes ``_id`` stable.  The second
-execution then decides every drop on relations that carry no text:
-the quality floor is a filter on ``_f.keep``; exact dedup a min-url
-window over ``(url, md5)`` pairs; the band collapse a window over
-band keys cut from ``_f.sig``; and the span strip a window over
-``(_id, pos, gram)`` rows, whose hit positions are collected per
-``_id``.  The losers leave the full rows through anti joins on url,
-the hit positions join back on ``_id``, and a second Arrow UDF
+execution then decides every drop on relations that carry no text
+and keys every decision by ``_id``: the quality floor is a filter on
+``_f.keep``; exact dedup a min-url window over ``(_id, url, md5)``
+rows; the band collapse a window over band keys cut from ``_f.sig``;
+and the span strip a window over ``(_id, pos, gram)`` rows, whose
+hit positions are collected per ``_id``.  The losers leave the full
+rows through anti joins on ``_id`` and the hit positions join back
+on it, so two rows of one url stay two documents; a second Arrow UDF
 rebuilds the text.  AQE broadcasts those relations while they are
 small, so the text never shuffles (a large loser set may get a
 sort-merge join, which does shuffle the rows).  The band keys are cut
@@ -55,10 +57,6 @@ Each stage's survivor count is an ``observe()`` metric of one of
 those two executions, so audit and data cannot drift.  The plans are
 built from SQL text and one-call projections, about 600 JVM round
 trips per pass.
-
-Precondition: the input holds each url once, as the extract table
-does.  The dedup stages drop losers by url, and the span strip counts
-one row as one document.
 
 Run:  spark-submit --py-files dist/engine.zip jobs/curate.py \
           --input /path/extracted --output /path/curated
@@ -262,10 +260,10 @@ def _make_rebuild_udf():
 
 def add_features(df: DataFrame, text_col: str = "text_extracted") -> DataFrame:
     """Attach the ``_f`` feature struct (see :func:`doc_features`)
-    that stages 4-7 read, and a row id ``_id`` that
-    :func:`strip_repeated_spans` keys the gram relation by; a narrow
-    projection, one UDF call per row.  ``_id`` is stable once the
-    frame is checkpointed, as ``curate()`` does."""
+    that stages 4-7 read, and a row id ``_id`` that stages 5-7 key
+    their decisions by; a narrow projection, one UDF call per row.
+    ``_id`` is stable once the frame is checkpointed, as ``curate()``
+    does."""
     return df.select(
         "*",
         F.monotonically_increasing_id().alias("_id"),
@@ -281,50 +279,54 @@ def quality_floor(df: DataFrame) -> DataFrame:
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text_extracted") -> DataFrame:
-    """Stage 5: the keeper is the min url per md5 of the text
-    (deterministic, resume-stable).  The md5 window runs over a
-    ``(url, _md5)`` projection, so only urls and digests shuffle; the
-    losers leave the full rows through one anti join on url."""
+    """Stage 5: the keeper is the min url per md5 of the text, ties to
+    the min row id ``_id`` (deterministic, resume-stable).  The md5
+    window runs over an ``(_id, url, _md5)`` projection, so no text
+    shuffles; the losers leave the full rows through one anti join on
+    ``_id``.  Two rows of one url with one text are one document
+    twice: the lower ``_id`` stays."""
     losers = (
-        df.selectExpr("url", f"md5(CAST({text_col} AS BINARY)) AS _md5")
-        .selectExpr("url", "min(url) OVER (PARTITION BY _md5) AS _ku")
-        .where("url != _ku")
+        df.selectExpr("_id", "url", f"md5(CAST({text_col} AS BINARY)) AS _md5")
+        .selectExpr(
+            "_id", "min_by(_id, struct(url, _id)) OVER (PARTITION BY _md5) AS _k"
+        )
+        .where("_id != _k")
     )
-    return df.join(losers, "url", "left_anti")
+    return df.join(losers, "_id", "left_anti")
 
 
-def neardup_collapse(df: DataFrame, pool: DataFrame | None = None) -> DataFrame:
+def neardup_collapse(df: DataFrame, pool: DataFrame) -> DataFrame:
     """Stage 6: banded MinHash-LSH collapse, keep the BEST-quality
     member per bucket (FineWeb-style keep-best: the highest quality
-    score wins, ties break to the min url).
+    score wins, ties break to the min url, then the min ``_id``).
 
     Reads the signature and the negated quality score from ``_f``.
-    Only ``(url, nq, band keys)`` shuffle, never text; a near-dup
+    Only ``(_id, url, nq, band keys)`` shuffle, never text; a near-dup
     group shares at least one band bucket, and the keeper rule (a doc
     survives only if it wins its bucket in EVERY band) removes one
-    side of every detected pair deterministically: every url that
-    loses some band is dropped by one anti join.  Docs too short to
-    shingle (empty signature) pass through untouched.
+    side of every detected pair deterministically: every row that
+    loses some band leaves ``df`` through one anti join on ``_id``.
+    Docs too short to shingle (empty signature) pass through
+    untouched.
 
-    The band keys are cut from ``pool`` (default ``df``).  ``curate()``
-    passes the frame before exact dedup, so the band window need not
-    wait for the md5 window.  That drops the same rows: an exact-dup
-    loser has its keeper's signature, quality score and buckets, and
-    a larger url, so any doc it beats in a bucket loses to the keeper
-    there too."""
-    sig = (df if pool is None else pool).where("size(_f.sig) > 0").selectExpr(
-        "url", "_f.nq AS _nq", "_f.sig AS sig"
+    The band keys are cut from ``pool``, the frame before exact dedup,
+    so the band window need not wait for the md5 window.  That drops
+    the same rows: an exact-dup loser has its keeper's signature,
+    quality score and buckets, and sorts after it, so it wins no
+    bucket and changes no bucket's winner."""
+    sig = pool.where("size(_f.sig) > 0").selectExpr(
+        "_id", "url", "_f.nq AS _nq", "_f.sig AS sig"
     )
-    # arg-max quality = min of (-q, url) over the band bucket
+    # arg-max quality = min of (-q, url, _id) over the band bucket
     losers = (
         lsh_bands(sig)
         .selectExpr(
-            "url",
-            "min_by(url, struct(_nq, url)) OVER (PARTITION BY band, band_key) AS _ku",
+            "_id",
+            "min_by(_id, struct(_nq, url, _id)) OVER (PARTITION BY band, band_key) AS _k",
         )
-        .where("url != _ku")
+        .where("_id != _k")
     )
-    return df.join(losers, "url", "left_anti")
+    return df.join(losers, "_id", "left_anti")
 
 
 def strip_repeated_spans(
@@ -340,9 +342,7 @@ def strip_repeated_spans(
     The gram hashes come from ``_f``; only (gram, row id, pos) triples
     shuffle, through one dup-gram window over the gram hash.  Each
     document's hit positions are collected and joined back on the row
-    id, and the rebuild UDF keeps the tokens no hit covers.  A row id
-    stands for one document because curate's input holds each url
-    once."""
+    id, and the rebuild UDF keeps the tokens no hit covers."""
     hits = (
         dup_gram_hits(
             df.selectExpr(id_col, "posexplode(_f.grams) AS (pos, g)"), id_col
@@ -363,9 +363,7 @@ def strip_repeated_spans(
 def curate(extracted: DataFrame) -> tuple[DataFrame, list[dict]]:
     """Run the funnel; returns (curated DF, per-stage lineage rows).
 
-    ``extracted`` holds each url once (the extract table's contract):
-    the dedup stages decide drops per url, and the span strip treats
-    one row as one document.  The stages compose into lazy plans that
+    The stages compose into lazy plans that
     run in two executions, each an eager ``localCheckpoint``:
     admission through the feature pass, then the quality floor
     through the span strip; the caller writes the second, checkpointed
@@ -394,7 +392,7 @@ def curate(extracted: DataFrame) -> tuple[DataFrame, list[dict]]:
         feats = add_features(s1b).localCheckpoint(eager=True)
         s2 = stage("quality", quality_floor(feats))
         s3 = stage("exact_dedup", exact_dedup(s2))
-        s4 = stage("near_dedup", neardup_collapse(s3, pool=s2))
+        s4 = stage("near_dedup", neardup_collapse(s3, s2))
         s5 = stage("span_dedup", strip_repeated_spans(s4))
         curated = s5.localCheckpoint(eager=True)
     finally:

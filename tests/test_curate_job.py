@@ -115,11 +115,8 @@ def _funnel_plan(extracted):
     from jobs import curate as C
 
     df = C.url_admission(extracted).filter(F.col("decode_error").isNull())
-    df = C.add_features(C.strip_host_templates(df))
-    for fn in (C.quality_floor, C.exact_dedup, C.neardup_collapse,
-               C.strip_repeated_spans):
-        df = fn(df)
-    return df
+    df = C.quality_floor(C.add_features(C.strip_host_templates(df)))
+    return C.strip_repeated_spans(C.neardup_collapse(C.exact_dedup(df), df))
 
 
 def test_curate_plan_stays_small(spark):
@@ -219,6 +216,38 @@ def test_url_admission_scores_empty_url(spark):
     assert [r.url for r in url_admission(df).collect()] == [""]
 
 
+def test_curate_keys_drops_by_row_not_by_url(spark):
+    """Two rows of one url are two documents.  With one text, exact
+    dedup keeps one of them and its text stays whole (were the copies
+    both kept, every 8-gram would be repeated and the span strip would
+    blank both).  With two texts, both rows survive untouched: no
+    stage drops a row because another row of its url lost."""
+    twin_a = " ".join(f"lorem{i} ipsum{i % 3} dolor" for i in range(30))
+    twin_b = " ".join(f"sitamet{i} consec{i % 4} adipis" for i in range(30))
+
+    def page(url, text):
+        return (url, _TS, bytearray(
+            b"<html><body><p>" + text.encode() + b"</p></body></html>"), "", "en")
+
+    base = _pages(spark)
+    extra = [r for r in base.collect() if r.url == "https://t/unique"]
+    extra += [page("https://t/twin", twin_a), page("https://t/twin", twin_b)]
+    pages = base.unionByName(spark.createDataFrame(extra, PAGES_STREAM_SCHEMA))
+    curated, funnel = curate(run_extract(pages, fmt="txt", threshold=100_000))
+    rows = curated.select("url", "text_extracted", "_tok_removed").collect()
+
+    unique = [r for r in rows if r.url == "https://t/unique"]
+    assert len(unique) == 1 and unique[0]._tok_removed == 0
+    twins = sorted(r.text_extracted.strip() for r in rows
+                   if r.url == "https://t/twin")
+    assert twins == sorted([twin_a, twin_b])
+    assert all(r._tok_removed == 0 for r in rows)
+    stages = {f["stage"]: f["rows"] for f in funnel}
+    assert stages["quality"] == 8
+    assert stages["exact_dedup"] == 6    # dup-b and the second unique
+    assert stages["span_dedup"] == 5     # near-a dropped
+
+
 def test_template_strip_removes_host_banner_and_spares_mirrors(spark):
     """Per-host banner LCP is stripped from every carrier; a host
     whose docs are IDENTICAL up to the prefix cap is a mirror, not a
@@ -271,8 +300,8 @@ def test_curate_strips_cross_document_repeated_span(spark):
             f"qq{i}" for i in range(30))),
     ]
     df = spark.createDataFrame(rows, "url string, text_extracted string")
-    out = {r.url: r.asDict()
-           for r in strip_repeated_spans(add_features(df)).collect()}
+    feats = add_features(df).localCheckpoint(eager=True)
+    out = {r.url: r.asDict() for r in strip_repeated_spans(feats).collect()}
 
     assert out["https://t/a"]["_tok_removed"] == 10
     assert out["https://t/b"]["_tok_removed"] == 10
@@ -466,10 +495,11 @@ def test_curate_shuffles_no_text_after_the_feature_checkpoint(spark, tmp_path):
     """curate's second execution (quality floor through span strip)
     decides every drop on relations without text: no shuffle Exchange
     in its plan outputs ``text_extracted``, and exact dedup's md5
-    exchange carries only the url and the digest.  The full rows meet
-    the loser sets and the hit positions through joins that AQE
-    broadcasts here; at scale, when a loser set is large, AQE may pick
-    a sort-merge join instead, and that shuffles the rows."""
+    exchange carries only the row id, the digest and the keeper's sort
+    key.  The full rows meet the loser sets and the hit positions
+    through joins that AQE broadcasts here; at scale, when a loser set
+    is large, AQE may pick a sort-merge join instead, and that
+    shuffles the rows."""
     sql = spark._jsparkSession.sharedState().statusStore()
     plans = [sql.execution(eid).get().physicalPlanDescription()
              for eid in _curate_executions(spark, tmp_path)]
@@ -486,7 +516,8 @@ def test_curate_shuffles_no_text_after_the_feature_checkpoint(spark, tmp_path):
         assert "text_extracted#" not in cols, cols
     md5 = [set(re.sub(r"#\d+L?", "", cols).split(", "))
            for cols, args in exchanges if args.startswith("hashpartitioning(_md5#")]
-    assert md5 and all(c == {"url", "_md5"} for c in md5)
+    # the third column is the (url, _id) key min_by orders by
+    assert md5 and all({"_id", "_md5"} <= c and len(c) == 3 for c in md5)
 
 
 def test_curate_builds_its_plans_in_few_jvm_round_trips(spark, tmp_path, monkeypatch):
