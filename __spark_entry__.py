@@ -128,8 +128,8 @@ def _extract_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from pdf_parser_spark.ops import all_queries
 
-    # The driver's correctness pass reads at most 50 entries: the two
-    # extract entries plus every registry op.
+    # The two extract entries plus every registry op: each one
+    # specifies what a job or stream runs.
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     out["extract_pages"] = _extract_pages
     out["extract_formats"] = _extract_formats

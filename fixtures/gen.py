@@ -411,11 +411,6 @@ PDF_CASES = {
     "heavy-tail": case_heavy_tail,
 }
 
-MALFORMED_CASES = frozenset(
-    k for k in PDF_CASES if k.startswith("malformed-")
-)
-
-
 def build_pdf_corpus() -> dict[str, bytes]:
     return {case_id: fn() for case_id, fn in PDF_CASES.items()}
 

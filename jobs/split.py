@@ -14,12 +14,12 @@ Guarantee: no val row is an LSH near-duplicate (at the dedup band
 resolution, ops/dedup.py) of any train row.  Rows too short to shingle
 stay in their hash split — they carry no leakage signal either way.
 
-Scale shape (same as ops/splits.py, plan-audited there): the signature
-UDF runs ONCE over the text (persisted — CollapseProject would re-run
-it per band); only ``(url, band, 32-byte key, bool)`` ever shuffles;
-the leak check is a LEFT SEMI join of the val band keys (a few % of
-the corpus) against the train band keys — Poisson(1) buckets, no pair
-explosion, text never moves.
+Scale shape (same as ops/splits.py, whose plan tests/test_ops_splits.py
+asserts): the signature UDF runs ONCE over the text (persisted —
+CollapseProject would re-run it per band); only ``(url, band, 32-byte
+key, bool)`` ever shuffles; the leak check is a LEFT SEMI join of the
+val band keys (a few % of the corpus) against the train band keys —
+Poisson(1) buckets, no pair explosion, text never moves.
 
 Run:  spark-submit --py-files dist/engine.zip jobs/split.py \
           --input /path/curated/data --output /path/split

@@ -25,7 +25,6 @@ RUST_WS = (
     "\u2028\u2029\u202f\u205f\u3000"
 )
 
-_WS_BYTES = frozenset(b" \t\n\r\x0c\x00")
 _HEX = frozenset(b"0123456789abcdefABCDEF")
 _OCTAL = frozenset(b"01234567")
 _HEXVAL = {c: int(chr(c), 16) for c in _HEX}

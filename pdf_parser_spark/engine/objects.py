@@ -84,12 +84,6 @@ def as_int(obj) -> int | None:
     return obj if isinstance(obj, int) else None
 
 
-def as_number(obj) -> float | None:
-    if isinstance(obj, bool):
-        return None
-    return float(obj) if isinstance(obj, (int, float)) else None
-
-
 def as_name(obj) -> str | None:
     return str(obj) if isinstance(obj, Name) else None
 

@@ -70,11 +70,6 @@ def roundn(col: Column, n: int) -> Column:
     return F.floor(col * scale + 0.5) / scale
 
 
-def roundn_sql(expr: str, n: int) -> str:
-    scale = float(10**n)
-    return f"(floor(({expr}) * {scale} + 0.5) / {scale})"
-
-
 # -- tokenization -----------------------------------------------------------
 
 def tokens(col: Column) -> Column:
@@ -188,26 +183,3 @@ def dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(F.slice("tok", 1, F.size("tok") - 1), " ").alias("text"),
     )
     return base.unionByName(twin)
-
-
-# -- exact integer log2 in millibits -----------------------------------------
-#
-# floor(log2(x)) from the binary digit count (float log2 misrounds near
-# powers of two, flaking the value-hash gate) plus the standard linear
-# interpolation between adjacent powers: L(x) = 1000*e + (x - 2^e)*1000
-# // 2^e.  Monotone non-decreasing, exact integers, engine-identical.
-# Used by ops/textstats.py (text_entropy).
-
-def log2_mbits(expr: str) -> Column:
-    """Spark column: L(expr) where expr is a positive BIGINT SQL
-    expression (string form so it can be inlined in F.expr)."""
-    e = f"(length(conv({expr}, 10, 2)) - 1)"
-    p = f"shiftleft(1L, cast({e} as int))"
-    return F.expr(f"{e} * 1000 + (({expr}) - {p}) * 1000 div {p}")
-
-
-def log2_mbits_sql(expr: str) -> str:
-    """DuckDB twin of :func:`log2_mbits`."""
-    e = f"(length(printf('%b', {expr})) - 1)"
-    p = f"(1::BIGINT << {e})"
-    return f"({e} * 1000 + (({expr}) - {p}) * 1000 // {p})"

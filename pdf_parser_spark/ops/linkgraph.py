@@ -1,11 +1,13 @@
 """Link-graph analysis: exact-integer power-iteration PageRank.
 
 Web-corpus curation weights documents by the authority of their host
-(crawl prioritization, quality priors for training-data mixing), and
-the canonical authority score is PageRank (Page, Brin, Motwani,
-Winograd, "The PageRank Citation Ranking", Stanford InfoLab 1999 —
-public).  The reference engine has no link analysis; this operator
-adds the iterative-graph algorithm class.
+(a quality prior for training-data mixing: jobs/linkrank.py ranks the
+extracted link graph with :func:`pagerank_over_edges`, and
+jobs/curate.py joins the ranks as ``host_rank_e9``), and the canonical
+authority score is PageRank (Page, Brin, Motwani, Winograd, "The
+PageRank Citation Ranking", Stanford InfoLab 1999 — public).  The
+reference engine has no link analysis; this module adds the
+iterative-graph algorithm class.
 
 Why exact integers: float PageRank is not engine-comparable — the
 damped sum accumulates in engine-specific order, so ranks drift by
@@ -142,51 +144,8 @@ def linkgraph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def crawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(host_id, pagerank_e9, n_docs, total_chars, priority_e9):
-    crawl-frontier prioritization — authority per already-crawled
-    document, so high-PageRank under-crawled hosts surface first (the
-    OPIC/priority-queue shape of production crawl schedulers, e.g.
-    Cho, Garcia-Molina, Page WWW'98 — public).
-
-    ``priority_e9 = (pagerank_e9 * 1000) div (1 + n_docs)`` — all
-    BIGINT (max ~1.6e13 at any host count, far from overflow).
-
-    Scale: both inputs are host-grained — the rank table from
-    :func:`linkgraph_pagerank` and a per-host count/size aggregate
-    whose map-side combine reduces each partition to O(hosts) rows;
-    the final join is host x host (broadcast at any realistic host
-    cardinality).  Document text contributes only its length, computed
-    in the scan projection.
-    """
-    ranks = linkgraph_pagerank(spark, sf_dir)
-    hosts = (
-        load_table(spark, sf_dir, "documents")
-        .select(
-            (h32(F.col("doc_id").cast("string")) % N_HOSTS).alias("host"),
-            F.length("text").alias("chars"),
-        )
-        .groupBy("host")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("chars").alias("total_chars"),
-        )
-    )
-    return ranks.join(
-        hosts, ranks.host_id == hosts.host, "left"
-    ).selectExpr(
-        "host_id",
-        "pagerank_e9",
-        "coalesce(n_docs, CAST(0 AS BIGINT)) AS n_docs",
-        "coalesce(total_chars, CAST(0 AS BIGINT)) AS total_chars",
-        "(pagerank_e9 * 1000) div (1 + coalesce(n_docs, CAST(0 AS BIGINT)))"
-        " AS priority_e9",
-    )
-
-
-def _pagerank_cte() -> str:
-    """The identical recurrence, unrolled as DuckDB CTEs (through
-    ``pr_{{PR_ITERS}}``; callers append their final SELECT)."""
+def _pagerank_sql() -> str:
+    """The identical recurrence, unrolled as DuckDB CTEs."""
     sql = f"""
 WITH docs AS (SELECT doc_id::VARCHAR AS d FROM documents),
 raw_edges AS (
@@ -215,108 +174,17 @@ pr_0 AS (
   FROM nodes nd CROSS JOIN nn
   LEFT JOIN contrib_{i} c ON c.node = nd.node
 )"""
-    return sql
-
-
-PAGERANK_SQL = (
-    _pagerank_cte()
-    + f"""
+    return sql + f"""
 SELECT p.node AS host_id,
        p.pr AS pagerank_e9,
        coalesce(d.outdeg, 0)::BIGINT AS out_degree
 FROM pr_{PR_ITERS} p
 LEFT JOIN outdeg d ON d.src = p.node
 """
-)
-
-CRAWL_PRIORITY_SQL = (
-    _pagerank_cte()
-    + f""", hosts AS (
-  SELECT {h32_sql("doc_id::VARCHAR")} % {N_HOSTS} AS host,
-         count(*)::BIGINT AS n_docs,
-         sum(length(text))::BIGINT AS total_chars
-  FROM documents GROUP BY 1
-)
-SELECT p.node AS host_id,
-       p.pr AS pagerank_e9,
-       coalesce(h.n_docs, 0)::BIGINT AS n_docs,
-       coalesce(h.total_chars, 0)::BIGINT AS total_chars,
-       ((p.pr * 1000) // (1 + coalesce(h.n_docs, 0)))::BIGINT AS priority_e9
-FROM pr_{PR_ITERS} p
-LEFT JOIN hosts h ON h.host = p.node
-"""
-)
-
-# ---------------------------------------------------------------------------
-# crawl_schedule — per-host politeness slot assignment
-# ---------------------------------------------------------------------------
-
-BASE_DELAY_MS = 100   # politeness floor between fetches of one host
-DELAY_STEP_MS = 50    # per-host-class extra delay (hosts differ)
-DELAY_CLASSES = 5
 
 
-def crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(host, doc_id, fetch_rank, slot_ms): politeness-scheduled fetch
-    slots — each host's fetches are serialized ``delay_ms`` apart,
-    ordered by a deterministic priority hash (so re-runs produce the
-    identical schedule), where ``delay_ms = BASE + (host %
-    DELAY_CLASSES) * STEP`` models per-host crawl-delay directives.
-
-    Scale: the ONLY wide stage is one exchange on ``host`` feeding the
-    per-host row_number — and per-host sequencing is exactly the
-    physical constraint politeness imposes (a host's fetch queue is
-    serial no matter how it's computed), so the window's partitioning
-    IS the work's natural grain.  Skew bound = max frontier depth per
-    host, which the crawler caps anyway; no corpus-global sort exists.
-    """
-    fetches = load_table(spark, sf_dir, "documents").select(
-        (h32(F.col("doc_id").cast("string")) % N_HOSTS).alias("host"),
-        "doc_id",
-        seeded_h32(F.lit("sched"), F.col("doc_id").cast("string")).alias(
-            "prio"
-        ),
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("host").orderBy("prio", "doc_id")
-    return fetches.select(
-        "host",
-        "doc_id",
-        F.row_number().over(w).cast("long").alias("fetch_rank"),
-        (
-            (F.row_number().over(w).cast("long") - 1)
-            * (
-                F.lit(BASE_DELAY_MS)
-                + (F.col("host") % DELAY_CLASSES) * DELAY_STEP_MS
-            )
-        ).alias("slot_ms"),
-    )
-
-
-CRAWL_SCHEDULE_SQL = f"""
-WITH fetches AS (
-  SELECT {h32_sql("doc_id::VARCHAR")} % {N_HOSTS} AS host,
-         doc_id,
-         {seeded_h32_sql("'sched'", "doc_id::VARCHAR")} AS prio
-  FROM documents
-),
-ranked AS (
-  SELECT host, doc_id,
-         row_number() OVER (PARTITION BY host ORDER BY prio, doc_id)
-           AS fetch_rank
-  FROM fetches
-)
-SELECT host, doc_id, fetch_rank::BIGINT AS fetch_rank,
-       ((fetch_rank - 1)
-        * ({BASE_DELAY_MS} + (host % {DELAY_CLASSES}) * {DELAY_STEP_MS})
-       )::BIGINT AS slot_ms
-FROM ranked
-"""
-
+PAGERANK_SQL = _pagerank_sql()
 
 QUERIES = {
     "linkgraph_pagerank": (linkgraph_pagerank, PAGERANK_SQL),
-    "crawl_priority": (crawl_priority, CRAWL_PRIORITY_SQL),
-    "crawl_schedule": (crawl_schedule, CRAWL_SCHEDULE_SQL),
 }

@@ -32,8 +32,8 @@ over the pages table's url column.
 Scale design: this is a pure scan-local projection — counts via
 ``length(x) - length(regexp_replace(x, class, ''))``, one anchored
 regexp for the digit run, integer arithmetic throughout, ZERO
-exchanges of any kind at any corpus size (plan-asserted in
-scripts/audit_plans.py: ``urlquality-scan-local``).  Everything runs
+exchanges of any kind at any corpus size (plan-asserted by
+tests/test_ops_urlquality.py::test_plan_is_scan_local).  Everything runs
 JVM-side inside WholeStageCodegen; the digit-share ratio is exact
 integer ppm (``n_digits * 1000000 / url_len``), so Spark and DuckDB
 agree bit-for-bit with no float rounding anywhere.

@@ -43,7 +43,6 @@ from collections.abc import Iterator
 import pandas as pd
 
 CRLF = b"\r\n"
-PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 
 # file-size boundary between the bin-packed and one-file-per-task
 # ingest classes (compressed bytes; a 64 MiB .warc.gz is ~250 MiB of

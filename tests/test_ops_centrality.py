@@ -182,3 +182,26 @@ def test_tracks_exact_bfs(result, graph):
             exact[v][t] for v in nodes
         )
         assert 0.5 < ratio < 2.0, f"radius {t} mass ratio {ratio}"
+
+
+def test_plan_radius_steps_reuse_cached_registers(spark):
+    """Every radius step reads the persisted register/edge relations
+    (InMemoryTableScan: the corpus parquet is scanned once, not once
+    per radius), merges are partial-aggregated groupBy-max, and
+    nothing but (node, bucket, rho) triples crosses a shuffle.
+    InMemoryRelation reprints its cached child plan under every
+    InMemoryTableScan, so "Scan parquet" still appears textually; the
+    property is that every register/edge reference reads a cache:
+    >= T+1 merge reads + T+1 estimate reads."""
+    try:
+        df = host_centrality_hyperball(spark, SF_DIR)
+        p = df._jdf.queryExecution().executedPlan().toString()
+        assert p.count("InMemoryTableScan") >= 8
+        assert "partial_max" in p
+        assert "ArrowEvalPython" not in p
+        assert all(
+            "text" not in seg[:400]
+            for seg in p.split("Exchange hashpartitioning")[1:]
+        )
+    finally:
+        spark.catalog.clearCache()

@@ -2,9 +2,7 @@
 dangling host that only ever appears as a link target) must produce
 the identical exact-integer ranks on both engines, and the fixed-point
 invariants must hold (every rank ≥ the damping base; total mass never
-exceeds the initial SCALE since dangling/floor loss only removes).
-crawl_priority's per-host doc counts must partition the corpus and its
-priority column must equal its defining formula exactly."""
+exceeds the initial SCALE since dangling/floor loss only removes)."""
 
 import os
 import sys
@@ -17,10 +15,8 @@ pyspark = pytest.importorskip("pyspark")
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pdf_parser_spark.ops.linkgraph import (  # noqa: E402
-    CRAWL_PRIORITY_SQL,
     PAGERANK_SQL,
     PR_SCALE,
-    crawl_priority,
     linkgraph_pagerank,
 )
 from scripts.parity_check import norm_rows  # noqa: E402
@@ -92,21 +88,3 @@ def test_pagerank_tiny_graph_parity_and_invariants(spark, tmp_path, n_docs):
     # mass only leaks (dangling drop + floor), never grows
     assert sum(r[1] for r in srows) <= PR_SCALE
     assert by_host  # non-empty
-
-
-def test_crawl_priority_partitions_docs_and_formula(spark, tmp_path):
-    rows = [(i, f"text of document {i}") for i in range(40)]
-    sf = _write_docs(spark, tmp_path, rows)
-    sdf = crawl_priority(spark, sf)
-    srows, cols = _assert_parity(sdf, _duck(sf), CRAWL_PRIORITY_SQL)
-    ix = {c: k for k, c in enumerate(cols)}
-    assert sum(r[ix["n_docs"]] for r in srows) == 40
-    ranks = {
-        r["host_id"]: r["pagerank_e9"]
-        for r in linkgraph_pagerank(spark, sf).collect()
-    }
-    for r in srows:
-        assert r[ix["priority_e9"]] == (
-            r[ix["pagerank_e9"]] * 1000
-        ) // (1 + r[ix["n_docs"]])
-        assert r[ix["pagerank_e9"]] == ranks[r[ix["host_id"]]]

@@ -15,6 +15,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pdf_parser_spark.ops.substring import GRAM_N, substring_dedup  # noqa: E402
 
+SF_DIR = "/root/testdata/sf0.001"
+
 
 @pytest.fixture(scope="module")
 def spark():
@@ -121,3 +123,13 @@ def test_gram_hashes_match_the_hexdigest_spelling():
         assert _gram_hashes(t) == [_h32_hexdigest(g) for g in grams], t
         sh = h32_grams(*utf8_tokens(t), SHINGLE_N)[0].tolist()
         assert sh == [_h32_hexdigest(g) for g in shingles], t
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="driver testdata not present")
+def test_plan_gram_hasher_runs_once_without_cartesian(spark):
+    """The duplicated-gram test is a window over the one gram
+    relation, not a self-join that would re-run the UDF per branch,
+    and there is no cartesian / nested-loop join."""
+    p = substring_dedup(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    assert p.count("ArrowEvalPython") == 1
+    assert "CartesianProduct" not in p and "NestedLoop" not in p

@@ -96,3 +96,18 @@ def test_lcp_stops_inside_body(rows, docs):
     for host, prefixes in docs.items():
         if len(set(prefixes)) > 1:
             assert rows[host]["lcp_len"] < PREFIX_CAP
+
+
+def test_plan_single_exchange_carries_the_prefix_not_the_text(spark):
+    """The one exchange carries the capped prefix, never the text
+    column: it is projected before the partial min/max aggregate, so
+    document bodies do not shuffle."""
+    p = host_template_prefix(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    ex_seg = (
+        p.split("Exchange hashpartitioning")[-1][:400]
+        if "Exchange hashpartitioning" in p
+        else ""
+    )
+    assert p.count("Exchange") == 1
+    assert "partial_min" in p
+    assert "text#" not in ex_seg

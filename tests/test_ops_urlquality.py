@@ -92,3 +92,11 @@ def test_each_structural_tell_fires(rows):
     assert all(r["admitted"] for r in by_slot[4])
     # blocked pages exist (the point of the gate)
     assert any(not r["admitted"] for r in rows.values())
+
+
+def test_plan_is_scan_local(spark):
+    """A pure scan-local projection: zero exchanges, zero Python, at
+    any corpus size."""
+    p = url_spam_score(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in p
+    assert "Python" not in p

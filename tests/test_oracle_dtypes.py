@@ -47,5 +47,5 @@ def test_oracle_emits_no_spark_incomparable_types(con, name):
            if typ.upper().split("(")[0] in FORBIDDEN]
     assert not bad, (
         f"oracle {name} emits driver-incomparable column types {bad}; "
-        f"wrap in CAST(... AS BIGINT) like lang_temperature_sample does"
+        f"wrap in CAST(... AS BIGINT) like linkgraph_pagerank does"
     )
